@@ -1497,19 +1497,19 @@ object Dedup {
     * forced with a hint. */
   private def dropWideBuckets(rows: DataFrame, keyCols: Seq[String],
       maxBucket: Int): DataFrame = {
-    // lazy localCheckpoint: the rows feed THREE consumers (the over-cap
-    // count, and both sides of the downstream self-join) — without it
-    // each consumer would recompute the whole signature subtree (the
-    // r5 bench measured +30% on the minhash family). One compute, three
-    // cached reads; the I/O is the same order as the window's exchange
-    // wrote. Production note: this is exactly where a deployment
-    // persists its band index instead (bandRows scaladoc) — the
-    // checkpoint is the self-contained stand-in.
-    // EAGER (r17): cached feeds the over-cap aggregate AND the
-    // anti-join probe — independent stages the scheduler runs
-    // concurrently; a lazy checkpoint serializes the second stage's
-    // tasks on per-block cache locks (32x worse once the input is
-    // fanned out by [[Fan.out]])
+    // EAGER localCheckpoint: the rows feed THREE consumers (the
+    // over-cap count, and both sides of the downstream self-join) —
+    // without it each consumer would recompute the whole signature
+    // subtree (the r5 bench measured +30% on the minhash family). One
+    // compute, three cached reads; the I/O is the same order as the
+    // window's exchange wrote. Eager, not lazy (r17): the over-cap
+    // aggregate and the anti-join probe are independent stages the
+    // scheduler runs concurrently, and a lazy checkpoint serializes the
+    // second stage's tasks on per-block cache locks (32x worse once the
+    // input is fanned out by [[Fan.out]]). Production note: this is
+    // exactly where a deployment persists its band index instead
+    // (bandRows scaladoc) — the checkpoint is the self-contained
+    // stand-in.
     val cached = rows.localCheckpoint()
     val ks = keyCols.map(col)
     val overCap = cached.groupBy(ks: _*)

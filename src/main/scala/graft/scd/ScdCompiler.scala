@@ -46,20 +46,24 @@ object ScdCompiler {
   def apply(df: DataFrame, log: ScdLog): DataFrame =
     apply(df, log.statements)
 
-  def apply(df: DataFrame, stmts: Seq[ScdStatement]): DataFrame = {
-    guardReplaySize(df, stmts.size)
-    stmts.foldLeft(df)(applyOne(_, _))
-  }
+  def apply(df: DataFrame, stmts: Seq[ScdStatement]): DataFrame =
+    replay(df, stmts.map((_, None)))
 
-  /** Guarded replay: every statement fires only where `guard` holds —
-    * the per-partition-sidecar path (a partition directory's log must
-    * only touch that partition's rows). The guard ANDs into each
-    * statement's predicate, so the whole partitioned replay stays ONE
-    * narrow scan — no per-partition union, and partition pruning on
-    * the guard columns still reaches the source. */
-  def apply(df: DataFrame, stmts: Seq[ScdStatement], guard: Column): DataFrame = {
-    guardReplaySize(df, stmts.size)
-    stmts.foldLeft(df)(applyOne(_, _, guard))
+  /** A statement plus its optional partition guard (see [[replay]]). */
+  type Step = (ScdStatement, Option[Column])
+
+  /** THE statement fold: every replay compiles here, and only here is
+    * the replay cap checked. A guarded step fires only where its guard
+    * holds (a partition directory's log touches only its rows); the
+    * guard ANDs into the predicate, so a partitioned replay stays ONE
+    * narrow scan with partition pruning intact. `compat` selects
+    * [[compat]]'s error policy (unguarded steps only). */
+  private[graft] def replay(df: DataFrame, steps: Seq[Step],
+      compat: Boolean = false): DataFrame = {
+    guardReplaySize(df, steps.size)
+    steps.foldLeft(df) { case (d, (stmt, guard)) =>
+      if (compat) applyOneCompat(d, stmt) else applyOne(d, stmt, guard)
+    }
   }
 
   /** Reference-compat error policy (O13, SQLUpdater.java:171-174): the
@@ -71,10 +75,8 @@ object ScdCompiler {
     * holds and any SET expression (incl. the write-back cast) raises.
     * Rows the statement doesn't touch are never at risk — H2 does not
     * evaluate SET expressions when the predicate is false. */
-  def compat(df: DataFrame, stmts: Seq[ScdStatement]): DataFrame = {
-    guardReplaySize(df, stmts.size)
-    stmts.foldLeft(df)(applyOneCompat)
-  }
+  def compat(df: DataFrame, stmts: Seq[ScdStatement]): DataFrame =
+    replay(df, stmts.map((_, None)), compat = true)
 
   /** The replay plan-cost guard's conf key (VERDICT r16 #4): each
     * statement is one chained projection/filter, and CATALYST cost —
@@ -103,7 +105,7 @@ object ScdCompiler {
     * observed cliff. */
   val MaxReplayStatementsDefault = 250
 
-  private[graft] def guardReplaySize(df: DataFrame, n: Int): Unit = {
+  private def guardReplaySize(df: DataFrame, n: Int): Unit = {
     val max = df.sparkSession.conf
       .get(MaxReplayStatementsConf, MaxReplayStatementsDefault.toString)
       .toInt
@@ -143,7 +145,7 @@ object ScdCompiler {
       }
       cur = cur.withColumn(s"__m_$i", col("__alive") && pred(where))
       stmt match {
-        case u: ScdUpdate => cur = applyOne(cur, u, col(s"__m_$i"))
+        case u: ScdUpdate => cur = applyOne(cur, u, Some(col(s"__m_$i")))
         case _: ScdDelete =>
           cur = cur.withColumn("__alive", col("__alive") && !col(s"__m_$i"))
       }
@@ -162,13 +164,13 @@ object ScdCompiler {
       s"stack(${stmts.size}, $stackArgs) AS (stmt_idx, verb, n_matched)"))
   }
 
-  private[scd] def applyOne(df: DataFrame, stmt: ScdStatement,
-      guard0: Column = lit(true)): DataFrame = {
+  private def applyOne(df: DataFrame, stmt: ScdStatement,
+      guard0: Option[Column]): DataFrame = {
     // three-valued-logic hygiene: a partition guard comparing against
     // a NULL partition value yields NULL, and filter(!NULL) would DROP
     // the row — a seg=A log deleting the null-partition's rows. NULL
     // guard must mean "not my partition", i.e. false.
-    val guard = coalesce(guard0, lit(false))
+    val guard = coalesce(guard0.getOrElse(lit(true)), lit(false))
     stmt match {
       case ScdUpdate(_, sets, where, _) =>
         // a SET column that resolves to nothing is a DML bug — fail like
@@ -197,7 +199,7 @@ object ScdCompiler {
     }
   }
 
-  private[scd] def applyOneCompat(df: DataFrame, stmt: ScdStatement): DataFrame = {
+  private def applyOneCompat(df: DataFrame, stmt: ScdStatement): DataFrame = {
     import org.apache.spark.sql.graft.CatalystBridge.{evalFails, safeValue}
     stmt match {
       case ScdUpdate(_, sets, where, _) =>

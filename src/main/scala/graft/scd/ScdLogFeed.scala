@@ -86,16 +86,18 @@ object ScdLogFeed {
     * the replay coordinate a log-feed consumer has (its offset is a
     * statement seq, not a timestamp); `n = 0` is the raw base,
     * `n >= log length` equals the `asOf = far future` time view.
-    * Compiled exactly like the time-gated path — one narrow
-    * zero-shuffle projection chain over the base scan. */
+    * Loaded and compiled exactly like the time-gated path — one narrow
+    * zero-shuffle projection chain over [[ScdReader.loadBase]]'s scan. */
   def asOfSeq(spark: SparkSession, dir: String, n: Long,
-      format: String = "parquet"): DataFrame = {
-    val base = spark.read.format(format).load(dir)
-    val stmts = entries(spark, dir).take(
-      math.min(n, Int.MaxValue.toLong).toInt)
-      .map(e => UpdatesParser.classify(e.stmt, e.effective_ms))
-    ScdCompiler(base, stmts)
-  }
+      format: String = "parquet"): DataFrame =
+    applyLogSeq(spark, ScdReader.loadBase(spark, dir, format), dir, n)
+
+  /** [[asOfSeq]] over an already-loaded base (the `VERSION AS OF` view's
+    * base carries the table's reader schema and options). */
+  private[graft] def applyLogSeq(spark: SparkSession, base: DataFrame,
+      dir: String, n: Long): DataFrame =
+    ScdCompiler(base, toStatements(
+      entries(spark, dir).take(math.min(n, Int.MaxValue.toLong).toInt)))
 
   /** CDC rows for the statement range `(fromSeq, toSeq]`: the
     * before/after diff of the seq-replay views, classified

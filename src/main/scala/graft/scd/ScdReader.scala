@@ -60,22 +60,25 @@ object ScdReader {
     applyLogFile(spark, loadBase(spark, dir, format, schema, options),
       dir, asOf)
 
-  /** Shared base-table loader for [[read]] / [[history]]. For Avro
-    * (no spark-avro connector here) the reader schema comes from the
-    * "avroSchema" option, else from a supplied StructType (converted
-    * through the reverse bridge), else the file's writer schema; a
-    * Hive-partitioned Avro directory routes through
-    * [[graft.sources.AvroSource.readPartitioned]], so partition
-    * columns resolve and per-partition sidecars can guard on them. */
-  private def loadBase(
+  /** THE loader from an SCD directory to its base DataFrame — every
+    * read path, SQL and streaming included, loads here. For Avro (no
+    * spark-avro connector here) the reader schema comes from the
+    * "avroSchema" option (any key case: SQL surfaces lower-case it),
+    * else from a supplied StructType (converted through the reverse
+    * bridge), else the file's writer schema; a Hive-partitioned Avro
+    * directory routes through [[graft.sources.AvroSource.readPartitioned]],
+    * so partition columns resolve and partition sidecars can guard. */
+  private[graft] def loadBase(
       spark: SparkSession,
       dir: String,
       format: String,
-      schema: Option[StructType],
-      options: Map[String, String]): DataFrame =
+      schema: Option[StructType] = None,
+      options: Map[String, String] = Map.empty): DataFrame =
     if (format.equalsIgnoreCase("avro")) {
-      val readerJson = options.get("avroSchema").orElse(schema.map(st =>
-        graft.sources.AvroSource.toAvroSchema(st, "record").toString))
+      val readerJson = options
+        .collectFirst { case (k, v) if k.equalsIgnoreCase("avroSchema") => v }
+        .orElse(schema.map(st =>
+          graft.sources.AvroSource.toAvroSchema(st, "record").toString))
       val p = new Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // cheap probe (readPartitioned re-walks anyway — don't decode
@@ -97,13 +100,13 @@ object ScdReader {
     * partition directory (reference parity: SQLUpdater.java:107-119
     * resolves `.updates` relative to EACH split's directory, so a
     * Hive-partitioned table carries an independent DML log per
-    * partition). A partition's statements are compiled with the
-    * partition predicate ANDed in, so the whole replay is still ONE
-    * narrow scan — no per-partition union, and pruning on partition
-    * columns passes through.
+    * partition). Retained statements are the steps of the one fold,
+    * [[ScdCompiler.replay]]; a partition's carry the partition
+    * predicate as their guard, so the replay is still ONE narrow scan.
     *
     * Cross-log composition order: with a SINGLE (root) log — the
-    * reference's own shape — statements replay in pure file order
+    * reference's own shape — retention is the reference's line fold
+    * ([[UpdatesParser.parse]]) and statements replay in pure file order
     * (O5). With multiple logs, statements merge in GLOBAL effective-
     * time order (partition logs touch disjoint rows, but the root log
     * overlaps every partition, so log-order replay would apply a
@@ -119,16 +122,11 @@ object ScdReader {
     if (sidecars.isEmpty) base
     else {
       val scdTime = ScdTime.resolve(asOf, confTime(spark))
-      if (sidecars.length == 1 && sidecars.head._1.isEmpty)
-        ScdCompiler(base, UpdatesParser.parse(sidecars.head._2, scdTime))
-      else {
-        val merged = mergedStatements(sidecars, scdTime)
-        ScdCompiler.guardReplaySize(base, merged.size)
-        merged.foldLeft(base) {
-          case (df, (None, stmt)) => ScdCompiler.applyOne(df, stmt)
-          case (df, (Some(g), stmt)) => ScdCompiler.applyOne(df, stmt, g)
-        }
-      }
+      ScdCompiler.replay(base,
+        if (sidecars.length == 1 && sidecars.head._1.isEmpty)
+          UpdatesParser.parse(sidecars.head._2, scdTime)
+            .statements.map((_, None))
+        else mergedStatements(sidecars, scdTime))
     }
   }
 
@@ -147,8 +145,7 @@ object ScdReader {
     * logs; ties keep root-first log order, then file order. */
   private def mergedStatements(
       sidecars: Seq[(Seq[(String, String)], String)],
-      scdTime: Long)
-      : Seq[(Option[org.apache.spark.sql.Column], ScdStatement)] = {
+      scdTime: Long): Seq[ScdCompiler.Step] = {
     // sort keys come from the FULL log (gateTime = MaxValue), not the
     // retained subset: the running max over only-retained statements
     // would give the same two statements a different relative order at
@@ -177,19 +174,11 @@ object ScdReader {
         }
     }.sortBy(_._1) // Seq.sortBy is a stable sort
     val retained = keyed.filter(_._3 <= scdTime).map {
-      case (_, sql, t, guard) => (guard, UpdatesParser.classify(sql, t))
+      case (_, sql, t, guard) => (UpdatesParser.classify(sql, t), guard)
     }
-    // the reference's one-table check (SQLUpdater.java:65-69), applied
-    // across ALL of the table dir's logs — root and partition sidecars
-    // address the same table by construction
-    retained.map(_._2).foldLeft(Option.empty[String]) { (acc, s) =>
-      acc match {
-        case Some(tb) if !tb.equalsIgnoreCase(s.table) =>
-          throw new IllegalStateException(
-            s"Multiple table names in DDL: $tb and ${s.table}")
-        case _ => Some(s.table)
-      }
-    }
+    // the one-table check spans ALL of the table dir's logs — root and
+    // partition sidecars address the same table by construction
+    UpdatesParser.singleTable(retained.map(_._1))
     retained
   }
 
@@ -207,8 +196,9 @@ object ScdReader {
 
   /** Apply a `.updates` log given as text — the core entry point; used
     * directly when the log lives outside the data directory (e.g. a CDC
-    * feed, or tests over read-only data dirs). */
-  /** @param errorSkipCompat reference-compat error policy (O13): DML
+    * feed, or tests over read-only data dirs).
+    *
+    * @param errorSkipCompat reference-compat error policy (O13): DML
     *        runtime errors drop the affected row instead of failing the
     *        query (SQLUpdater.java:171-174). Default = Spark-idiomatic
     *        fail-fast. */
@@ -252,59 +242,38 @@ object ScdReader {
   def historyText(
       spark: SparkSession,
       base: DataFrame,
-      logText: String): DataFrame = {
-    val all = UpdatesParser.parse(logText, Long.MaxValue)
-    val times = (0L +: all.statements.map(_.timeMillis)).distinct.sorted
-    val snapshots = times.zipWithIndex.map { case (t, i) =>
-      val upTo = all.statements.filter(_.timeMillis <= t)
-      val validTo =
-        if (i + 1 < times.length) functions.lit(times(i + 1))
-        else functions.lit(null).cast("long")
-      ScdCompiler(base, upTo)
-        .withColumn("valid_from_ms", functions.lit(t))
-        .withColumn("valid_to_ms", validTo)
-    }
-    snapshots.reduce(_ unionByName _)
-  }
+      logText: String): DataFrame =
+    snapshots(base, UpdatesParser.parse(logText, Long.MaxValue)
+      .statements.map((_, None)))
 
   /** History export for a table directory (see [[historyText]]) —
-    * partition-aware: per-partition sidecars contribute their
-    * statements under their partition guard, and the snapshot
-    * timeline is the union of ALL logs' distinct effective times. */
+    * partition-aware: the steps are [[applyLogFile]]'s global-time
+    * merge of every sidecar at an all-inclusive time (for one root log,
+    * exactly [[historyText]]'s statements), so every snapshot is
+    * derivable from its predecessor by the statements between them. */
   def history(
       spark: SparkSession,
       dir: String,
       format: String = "parquet",
       schema: Option[StructType] = None,
-      options: Map[String, String] = Map.empty): DataFrame = {
-    val base = loadBase(spark, dir, format, schema, options)
-    val sidecars = readAllSidecars(spark, dir)
-    if (sidecars.isEmpty)
-      base
-        .withColumn("valid_from_ms", functions.lit(0L))
-        .withColumn("valid_to_ms", functions.lit(null).cast("long"))
-    else if (sidecars.length == 1 && sidecars.head._1.isEmpty)
-      historyText(spark, base, sidecars.head._2)
-    else {
-      // same global-time merge as applyLogFile, so every snapshot is
-      // derivable from its predecessor by the statements between them
-      val merged = mergedStatements(sidecars, Long.MaxValue)
-      ScdCompiler.guardReplaySize(base, merged.size)
-      val times = (0L +: merged.map(_._2.timeMillis)).distinct.sorted
-      val snapshots = times.zipWithIndex.map { case (t, i) =>
-        val asOf = merged.filter(_._2.timeMillis <= t).foldLeft(base) {
-          case (df, (None, stmt)) => ScdCompiler.applyOne(df, stmt)
-          case (df, (Some(g), stmt)) => ScdCompiler.applyOne(df, stmt, g)
-        }
-        val validTo =
-          if (i + 1 < times.length) functions.lit(times(i + 1))
-          else functions.lit(null).cast("long")
-        asOf
-          .withColumn("valid_from_ms", functions.lit(t))
-          .withColumn("valid_to_ms", validTo)
-      }
-      snapshots.reduce(_ unionByName _)
-    }
+      options: Map[String, String] = Map.empty): DataFrame =
+    snapshots(loadBase(spark, dir, format, schema, options),
+      mergedStatements(readAllSidecars(spark, dir), Long.MaxValue))
+
+  /** Per distinct effective time t (epoch first), the replay of the
+    * steps dated <= t, tagged [t, next t). The latest snapshot (every
+    * step) compiles first, so an over-cap log fails before the rest. */
+  private def snapshots(base: DataFrame,
+      steps: Seq[ScdCompiler.Step]): DataFrame = {
+    val times = (0L +: steps.map(_._1.timeMillis)).distinct.sorted
+    times.indices.reverse.map { i =>
+      val validTo =
+        if (i + 1 < times.length) functions.lit(times(i + 1))
+        else functions.lit(null).cast("long")
+      ScdCompiler.replay(base, steps.filter(_._1.timeMillis <= times(i)))
+        .withColumn("valid_from_ms", functions.lit(times(i)))
+        .withColumn("valid_to_ms", validTo)
+    }.reverse.reduce(_ unionByName _)
   }
 
   /** Register the as-of view under a SQL-queryable name — the analogue

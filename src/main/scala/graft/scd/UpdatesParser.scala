@@ -35,17 +35,18 @@ object UpdatesParser {
       strictCommentCompat: Boolean = false): ScdLog = {
     val raw = rawStatements(text, scdTime, strictCommentCompat)
     val stmts = raw.map { case (sql, t) => classify(sql, t) }
-    val table = stmts.foldLeft(Option.empty[String]) { (acc, s) =>
-      acc match {
-        case None => Some(s.table)
-        case Some(t) if t.equalsIgnoreCase(s.table) => acc
-        case Some(t) =>
-          throw new IllegalStateException(
-            s"Multiple table names in DDL: $t and ${s.table}")
-      }
-    }
-    ScdLog(table, stmts)
+    ScdLog(singleTable(stmts), stmts)
   }
+
+  /** The reference's one-table check (SQLUpdater.java:65-69): the one
+    * table all `stmts` target (first spelling), None when empty. */
+  private[scd] def singleTable(stmts: Seq[ScdStatement]): Option[String] =
+    stmts.foldLeft(Option.empty[String]) {
+      case (Some(t), s) if !t.equalsIgnoreCase(s.table) =>
+        throw new IllegalStateException(
+          s"Multiple table names in DDL: $t and ${s.table}")
+      case (acc, s) => acc.orElse(Some(s.table))
+    }
 
   /** The line fold: returns retained (statementSql, effectiveTimeMillis)
     * pairs in file order. */

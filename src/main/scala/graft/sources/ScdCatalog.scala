@@ -37,9 +37,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * options (`spark.sql.catalog.graft.format=orc`, `.asOf=...`) become
   * reader defaults for every table.
   *
-  * With [[graft.GraftExtensions]] installed the loaded [[ScdTable]] is
-  * rewritten to the compiled replay plan at analysis (full pushdown);
-  * without it the V1Scan fallback serves, correct either way. */
+  * Each load builds the as-of view ONCE ([[ScdDataSource.view]]: the
+  * one base loader, the one replay fold) and the loaded [[ScdTable]]
+  * carries it: with [[graft.GraftExtensions]] installed the analyzer
+  * rewrite substitutes that build (full pushdown); without it the
+  * V1Scan fallback serves, correct either way. */
 class ScdCatalog extends TableCatalog with ProcedureCatalog {
 
   /** Maintenance procedures, SQL-callable (`CALL graft.compact(...)`,
@@ -97,7 +99,8 @@ class ScdCatalog extends TableCatalog with ProcedureCatalog {
     val hp = new org.apache.hadoop.fs.Path(p.path)
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp)) throw new NoSuchTableException(ident)
-    ScdTable(ScdDataSource.view(spark, p, None).schema, p)
+    val view = ScdDataSource.view(spark, p, None) // the rewrite reuses it
+    ScdTable(view.schema, p)(Some(view))
   }
 
   override def loadTable(ident: Identifier): Table =

@@ -32,14 +32,15 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
   * `spark.graft.scd.time` conf > `spark.scd.time` conf > now;
   * `-1` disables replay.
   *
-  * Two execution paths, resolved automatically:
+  * Both execution paths build the same view ([[ScdDataSource.view]]:
+  * [[ScdReader.loadBase]], then [[graft.scd.ScdCompiler.replay]]):
   *
   *  1. '''Native (preferred)''' — with [[graft.GraftExtensions]]
   *     installed (`spark.sql.extensions=graft.GraftExtensions` or
   *     builder-time `withExtensions`), an analyzer rule
   *     ([[org.apache.spark.sql.graft.ScdRelationRewrite]]) replaces the
-  *     DSv2 relation with the compiled replay plan itself, exactly what
-  *     `ScdReader.read` returns: the scan stays a zero-shuffle
+  *     DSv2 relation with the handle's [[ScdTable.view]] — exactly
+  *     what `ScdReader.read` returns: the scan stays a zero-shuffle
   *     codegen'd projection chain and outer filters / projections push
   *     all the way into the parquet/Avro scan (PushedFilters,
   *     ReadSchema, PartitionFilters — proven by ScdSqlSourceSpec).
@@ -52,7 +53,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
   *     underneath still skips columns and row groups); the one cost vs
   *     the native path is a Row-conversion boundary at the top of the
   *     scan. All pushed filters are reported as unhandled, so Spark
-  *     re-applies them above — double evaluation, never a wrong row.
+  *     re-applies them above — double evaluation, never a wrong row;
+  *     like Hive in the reference, each scan re-reads the sidecar.
   *
   * At 100 TB the native path is the one to deploy (one session conf);
   * the fallback exists so `format("scd")` is never silently wrong, just
@@ -78,7 +80,7 @@ class ScdDataSource extends TableProvider with RelationProvider
     val p = ScdDataSource.capturedConfTime(
       ScdDataSource.params(new CaseInsensitiveStringMap(properties)),
       SparkSession.active)
-    if (p.logFeed) ScdLogTable(p.path) else ScdTable(schema, p)
+    if (p.logFeed) ScdLogTable(p.path) else ScdTable(schema, p)()
   }
 
   // ---- V1 surface (CREATE [TEMPORARY] VIEW/TABLE ... USING scd) ------
@@ -156,25 +158,30 @@ object ScdDataSource {
       logFeed)
   }
 
-  /** The as-of view behind every path of this source — exactly
-    * [[ScdReader.read]] (time coordinate) or
-    * [[graft.scd.ScdLogFeed.asOfSeq]] (statement-seq coordinate).
-    * Public: the analysis rewrite rule lives in the
-    * `org.apache.spark.sql.graft` bridge package. */
+  /** The as-of view behind every path of this source: the
+    * [[ScdReader.loadBase]] base replayed by time ([[ScdReader.read]])
+    * or by statement seq ([[graft.scd.ScdLogFeed.asOfSeq]]). */
   def view(spark: SparkSession, p: ScdParams,
-      schema: Option[StructType]): DataFrame =
+      schema: Option[StructType]): DataFrame = {
+    val base = ScdReader.loadBase(spark, p.path, p.format, schema, p.extra)
     p.asOfSeq match {
-      case Some(n) => graft.scd.ScdLogFeed.asOfSeq(spark, p.path, n, p.format)
-      case None =>
-        ScdReader.read(spark, p.path, p.format, schema, p.extra, p.asOf)
+      case Some(n) => graft.scd.ScdLogFeed.applyLogSeq(spark, base, p.path, n)
+      case None => ScdReader.applyLogFile(spark, base, p.path, p.asOf)
     }
+  }
 }
 
-/** DSv2 table handle: pure metadata — with the extension installed it
-  * is rewritten away at analysis; otherwise [[ScdScanBuilder]] serves
-  * it through the V1Scan bridge. */
+/** DSv2 table handle — with the extension installed it is rewritten
+  * away at analysis to its [[view]]; otherwise [[ScdScanBuilder]]
+  * serves it through the V1Scan bridge. Equality is on `(schema,
+  * params)`; `built` is a view an [[ScdCatalog]] load already made. */
 case class ScdTable(override val schema: StructType,
-    params: ScdDataSource.ScdParams) extends Table with SupportsRead {
+    params: ScdDataSource.ScdParams)(built: Option[DataFrame] = None)
+    extends Table with SupportsRead {
+
+  /** The as-of view, built at most once per handle. */
+  lazy val view: DataFrame = built.getOrElse(
+    ScdDataSource.view(SparkSession.active, params, Some(schema)))
 
   override def name(): String = s"scd:${params.path}"
 

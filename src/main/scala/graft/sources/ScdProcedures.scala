@@ -372,7 +372,9 @@ object ScdProcedures {
     * time on every CALL if each statement carries its own effective
     * time.
     *
-    * Returns the dir and the total statement count now in the log.
+    * Returns the dir and the total statement count now in the log,
+    * counted from the log the append validated — one sidecar read and
+    * one whole-log parse per CALL.
     *
     * Concurrency: each CALL is one atomic read-validate-rename;
     * sequential interleavings with `compact(clear_log)` serialize in
@@ -422,12 +424,9 @@ object ScdProcedures {
           s"add_update: time must be a bare timestamp, got '$t'")
       }
       val lines = time.fold(Seq(stmt))(t => Seq(s"-- time=$t", stmt))
-      graft.streaming.ScdStream.appendStatements(spark, dir, lines)
-      val total = graft.scd.ScdReader.readSidecar(spark, dir)
-        .map(t => graft.scd.UpdatesParser
-          .parse(t, Long.MaxValue).statements.size.toLong)
-        .getOrElse(0L)
-      new GenericInternalRow(Array[Any](utf8(dir), total))
+      val log = graft.streaming.ScdStream.appendStatements(spark, dir, lines)
+      new GenericInternalRow(Array[Any](utf8(dir),
+        log.statements.size.toLong))
     }
   }
 

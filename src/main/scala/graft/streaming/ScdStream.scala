@@ -808,7 +808,7 @@ object ScdStream {
     val fresh = entries.filter(_.seq > applied)
     if (fresh.isEmpty) return
     val base = latestSnapshot(spark, snapshotDir)
-      .getOrElse(spark.read.format(format).load(tableDir))
+      .getOrElse(graft.scd.ScdReader.loadBase(spark, tableDir, format))
     val next = graft.scd.ScdCompiler(base,
       graft.scd.ScdLogFeed.toStatements(fresh))
     // versions are named by the SEQ WATERMARK, not the batch id:
@@ -889,6 +889,7 @@ object ScdStream {
         } else {
           val stmts = batch.select(col(textCol)).collect().map(_.getString(0))
           appendStatements(spark, tableDir, stmts.toIndexedSeq, Some(token))
+          ()
         }
       }
   }
@@ -896,9 +897,11 @@ object ScdStream {
   /** Validate + append statement lines to `dir/.updates`: write the
     * whole new content to a temp file, then rename OVER the live
     * sidecar (FileContext overwrite-rename — no window in which a
-    * concurrent read sees no sidecar at all). */
+    * concurrent read sees no sidecar at all). Returns the new log as
+    * validated, so a caller reporting on it needs no second read. */
   def appendStatements(spark: SparkSession, tableDir: String,
-      stmtLines: Seq[String], batchToken: Option[String] = None): Unit = {
+      stmtLines: Seq[String], batchToken: Option[String] = None)
+      : graft.scd.ScdLog = {
     // the batch marker is an ordinary comment line INSIDE the sidecar
     // (the parser's comment strip skips it), so statements + marker
     // land in ONE atomic rename — a crash can never record the batch
@@ -910,8 +913,9 @@ object ScdStream {
     val combined = existing + addition
     // parse the WHOLE prospective log at an all-inclusive time: throws
     // on malformed/incomplete/mixed-table input before anything lands
-    graft.scd.UpdatesParser.parse(combined, Long.MaxValue)
+    val log = graft.scd.UpdatesParser.parse(combined, Long.MaxValue)
     graft.scd.ScdReader.writeSidecarAtomic(spark, tableDir, combined)
+    log
   }
 
   private val BatchMarkerPrefix = graft.scd.ScdReader.BatchMarkerPrefix

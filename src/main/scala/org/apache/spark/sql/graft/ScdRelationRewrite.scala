@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import graft.sources.{ScdDataSource, ScdTable}
+import graft.sources.ScdTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
@@ -21,6 +21,9 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * architecture as Delta Lake's rewrite of its own table node (public
   * DeltaAnalysis pattern); registered by [[graft.GraftExtensions]].
   *
+  * The substituted plan is the handle's own [[ScdTable.view]], which a
+  * catalog load already built for its schema — one build per read.
+  *
   * Runs at analysis (not optimization) so it fires BEFORE
   * V2ScanRelationPushDown would try to build a physical scan. The rule
   * is idempotent: the substituted plan contains no [[ScdTable]] nodes.
@@ -31,11 +34,7 @@ class ScdRelationRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     plan.resolveOperatorsUp {
       case r: DataSourceV2Relation if r.table.isInstanceOf[ScdTable] =>
         val t = r.table.asInstanceOf[ScdTable]
-        // nested analysis of the replay plan (tiny: sidecar parse is
-        // driver-side, the plan is scan + projections)
-        val resolved = ScdDataSource
-          .view(spark, t.params, Some(t.schema))
-          .queryExecution.analyzed
+        val resolved = t.view.queryExecution.analyzed
         val resolver = spark.sessionState.conf.resolver
         val proj: Seq[NamedExpression] = r.output.map { out =>
           val src = resolved.output.find(a => resolver(a.name, out.name))

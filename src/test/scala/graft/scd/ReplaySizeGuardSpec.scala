@@ -28,6 +28,20 @@ class ReplaySizeGuardSpec extends SparkSpec {
     dir
   }
 
+  /** Hive-partitioned dir: a root log of `rootK` statements plus a
+    * `seg=a` partition log of `partK`, merged into one replay. */
+  private def partitionedDirWith(rootK: Int, partK: Int): String = {
+    val dir = Files.createTempDirectory("replayguardpart").toString
+    import spark.implicits._
+    Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("id", "v", "seg")
+      .write.mode("overwrite").partitionBy("seg").parquet(dir)
+    Files.write(java.nio.file.Paths.get(dir, ".updates"),
+      logOf(rootK).getBytes("UTF-8"))
+    Files.write(java.nio.file.Paths.get(dir, "seg=a", ".updates"),
+      logOf(partK).getBytes("UTF-8"))
+    dir
+  }
+
   test("replay at the default cap succeeds; one past it fails loud with the compaction hint") {
     val max = ScdCompiler.MaxReplayStatementsDefault
     assert(max == 250) // the SCALE.md-measured threshold, pinned
@@ -46,17 +60,28 @@ class ReplaySizeGuardSpec extends SparkSpec {
 
   test("conf override raises the cap; guard covers the reader path end-to-end") {
     val dir = dirWith(150)
-    // lowering the conf trips the guard on a log the default accepts
+    val part = partitionedDirWith(100, 50) // 150 once merged
+    // lowering the conf trips the guard on a log the default accepts —
+    // on every reader path, with the same loud error
     spark.conf.set(ScdCompiler.MaxReplayStatementsConf, "100")
     try {
-      val e = intercept[IllegalStateException] {
-        ScdReader.read(spark, dir)
+      Seq[(String, () => Any)](
+        "read" -> (() => ScdReader.read(spark, dir)),
+        "partitioned read" -> (() => ScdReader.read(spark, part)),
+        "history" -> (() => ScdReader.history(spark, dir)),
+        "partitioned history" -> (() => ScdReader.history(spark, part))
+      ).foreach { case (path, run) =>
+        val e = intercept[IllegalStateException](run())
+        assert(e.getMessage.contains("SCD replay of 150 statements " +
+          s"exceeds ${ScdCompiler.MaxReplayStatementsConf}=100") &&
+          e.getMessage.contains("compact"), s"$path: ${e.getMessage}")
       }
-      assert(e.getMessage.contains("150"), e.getMessage)
     } finally spark.conf.unset(ScdCompiler.MaxReplayStatementsConf)
-    // and the default cap replays the same dir fine
+    // and the default cap replays the same dirs fine
     val out = ScdReader.read(spark, dir)
     assert(out.where(col("id") === 1L).head.getLong(1) == 11L)
+    val outPart = ScdReader.read(spark, part)
+    assert(outPart.where(col("id") === 1L).head.getLong(1) == 12L)
   }
 
   test("compact(clearLog) is the prescribed escape: the compacted dir replays with an empty log") {

@@ -1,20 +1,22 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.scd.ScdReader
+import graft.scd.{ScdLogFeed, ScdReader}
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-/** End-to-end over the reference's ACTUAL fixture files: read
-  * `example/doctors.avro` (deflate-coded Avro container, 3-field writer
-  * schema) with the 4-field READER schema from `example/doctors.hql`
+/** End-to-end over the reference's example table: read `doctors.avro`
+  * (deflate-coded Avro container, 3-field writer schema) with the
+  * 4-field READER schema from the reference's `example/doctors.hql`
   * (adds `extra_field` default "fishfingers and custard" —
   * README.md:91-97 schema evolution), apply the `example/updates` DML,
   * and reproduce all three README golden outputs (README.md:153-212).
+  * Both fixtures live under `src/test/resources/doctors/`; the Avro file
+  * is a reconstruction from FIXTURES.md §1.1-1.3, not the reference's
+  * own bytes.
   */
 class AvroGoldenSpec extends SparkSpec {
 
-  private val refDir = "/root/reference/example"
   private val d = "fishfingers and custard"
 
   /** reader schema per example/doctors.hql (avro.schema.literal) */
@@ -27,14 +29,18 @@ class AvroGoldenSpec extends SparkSpec {
       |  {"name":"extra_field","type":"string","default":"fishfingers and custard"}
       |]}""".stripMargin
 
-  /** the reference dir is read-only and names its log `updates` (no
-    * dot); stage a proper SCD table dir: avro file + `.updates` */
+  /** the reference names its log `updates` (no dot); stage a proper
+    * SCD table dir from the classpath fixtures: avro file + `.updates` */
   private lazy val tableDir: String = {
     val dir = Files.createTempDirectory("avroscd")
-    Files.copy(Paths.get(refDir, "doctors.avro"),
-      dir.resolve("doctors.avro"), StandardCopyOption.REPLACE_EXISTING)
-    Files.copy(Paths.get(refDir, "updates"),
-      dir.resolve(ScdReader.SidecarName), StandardCopyOption.REPLACE_EXISTING)
+    def stage(resource: String, name: String): Unit = {
+      val in = getClass.getResourceAsStream(s"/doctors/$resource")
+      assert(in != null, s"missing test resource doctors/$resource")
+      try Files.copy(in, dir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
+      finally in.close()
+    }
+    stage("doctors.avro", "doctors.avro")
+    stage("updates", ScdReader.SidecarName)
     dir.toString
   }
 
@@ -107,6 +113,41 @@ class AvroGoldenSpec extends SparkSpec {
 
   test("golden #3 — scd.time=-1: raw 11 rows unchanged (README.md:196-212)") {
     assert(readAsOf(Some("-1")) == rawSet)
+  }
+
+  test("statement-seq views load the Avro base: asOfSeq, catalog VERSION AS OF, materializeFromLog") {
+    val far = readAsOf(Some("9999-12-31"))
+    def rows3(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Int]("number"), r.getAs[String]("first_name"),
+        r.getAs[String]("last_name"))).toSet
+    val far3 = far.map { case (n, f, l, _) => (n, f, l) }
+    // writer schema (no reader schema passed): the 3 written fields
+    assert(rows3(ScdLogFeed.asOfSeq(spark, tableDir, 2, "avro")) == far3)
+    assert(rows3(ScdLogFeed.asOfSeq(spark, tableDir, Long.MaxValue,
+      "avro")) == far3)
+    // catalog options reach the one loader on the VERSION AS OF branch
+    val cat = "spark.sql.catalog.graft_avro"
+    spark.conf.set(cat, classOf[ScdCatalog].getName)
+    spark.conf.set(s"$cat.format", "avro")
+    spark.conf.set(s"$cat.avroSchema", readerSchema)
+    try {
+      def version(n: Int) =
+        spark.sql(s"SELECT * FROM graft_avro.`$tableDir` VERSION AS OF $n")
+          .collect()
+          .map(r => (r.getAs[Int]("number"), r.getAs[String]("first_name"),
+            r.getAs[String]("last_name"), r.getAs[String]("extra_field")))
+          .toSet
+      assert(version(2) == far)
+      assert(version(1) == readAsOf(Some("2014-01-01")))
+      assert(version(0) == rawSet)
+    } finally Seq(cat, s"$cat.format", s"$cat.avroSchema")
+      .foreach(spark.conf.unset)
+    // the materializer's first snapshot loads the Avro base too
+    val snaps = Files.createTempDirectory("avrosnap").toString
+    graft.streaming.ScdStream.applyLogBatch(
+      ScdLogFeed.feed(spark, tableDir), tableDir, snaps, 0L, "avro")
+    assert(rows3(graft.streaming.ScdStream.latestSnapshot(spark, snaps).get)
+      == far3)
   }
 
   test("DML can reference the reader-defaulted column") {

@@ -61,6 +61,47 @@ class ScdCatalogSpec extends SparkSpec {
     assert(v2.count() == 90)
   }
 
+  /** `body`'s result and its `.updates` opens (a view build reads each
+    * sidecar once), through a counting local filesystem swapped in. */
+  private def sidecarOpens[T](body: => T): (T, Int) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[SidecarOpenCountingFs].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    SidecarOpenCountingFs.opens.set(0)
+    try (body, SidecarOpenCountingFs.opens.get)
+    finally Seq("fs.file.impl", "fs.file.impl.disable.cache")
+      .foreach(conf.unset)
+  }
+
+  test("a catalog read builds its view once; add_update reads the sidecar once") {
+    assert(sidecarOpens(ScdReader.read(spark, dir))._2 == 1)
+    // the catalog's build is the one the analyzer rewrite substitutes
+    Seq("", " VERSION AS OF 1").foreach { travel =>
+      assert(sidecarOpens(spark.sql(s"SELECT * FROM graft.`$dir`$travel")
+        .queryExecution.analyzed)._2 == 1, travel)
+    }
+    val d = Files.createTempDirectory("scdcat_once").toString
+    Seq((1L, 1.0)).toDF("id", "bal").write.mode("overwrite").parquet(d)
+    spark.sql(s"CALL graft.add_update('$d', 'DELETE FROM t WHERE id = 2;')")
+      .collect()
+    val (r, opens) = sidecarOpens(spark.sql(
+      s"CALL graft.add_update('$d', 'UPDATE t SET bal = 2 WHERE id = 1;')")
+      .collect())
+    assert(opens == 1 && r(0).getLong(1) == 2L, (opens, r.toList))
+  }
+
+  test("a self-join of one catalog table keeps its two sides apart") {
+    val q = s"SELECT a.id, b.id FROM graft.`$dir` a JOIN graft.`$dir` b " +
+      "ON a.id = b.id + 1 WHERE a.seg = 'A'"
+    val v = ScdReader.read(spark, dir)
+    val expected = v.as("a").join(v.as("b"), col("a.id") === col("b.id") + 1)
+      .where(col("a.seg") === "A").select("a.id", "b.id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(expected.size == 50)
+    assert(spark.sql(q).collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSet == expected)
+  }
+
   test("pushdown reaches the file scan through the catalog table") {
     val df = spark.sql(s"SELECT id, bal FROM graft.`$dir` WHERE id = 7")
     val plan = df.queryExecution.executedPlan.toString
@@ -380,4 +421,18 @@ class ScdCatalogSpec extends SparkSpec {
     assert(win(("a", 1L)) == "t6 t7 t8")
     assert(win(("b", 0L)) == "u1 u2")
   }
+}
+
+/** Local filesystem that counts opens of `.updates` sidecars. */
+class SidecarOpenCountingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path,
+      bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName == ScdReader.SidecarName)
+      SidecarOpenCountingFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object SidecarOpenCountingFs {
+  val opens = new java.util.concurrent.atomic.AtomicInteger
 }
