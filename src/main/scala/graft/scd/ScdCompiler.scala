@@ -2,9 +2,11 @@ package graft.scd
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScdReplay
 
-/** Compiles a parsed `.updates` log onto a DataFrame as a fold of
-  * narrow, codegen-friendly transformations (SURVEY.md §7.1 module 3).
+/** Compiles a parsed `.updates` log onto a DataFrame as ONE replay
+  * node, [[org.apache.spark.sql.graft.ScdReplay]] (SURVEY.md §7.1
+  * module 3).
   *
   * Semantic contract (SURVEY.md §2.1 derived invariant):
   * {{{
@@ -18,28 +20,31 @@ import org.apache.spark.sql.functions._
   *   - statements compose SEQUENTIALLY in file order — statement k+1
   *     sees statement k's output (the reference's one-row H2 table
   *     persists mutations across statements within one apply loop,
-  *     SQLUpdater.java:166-170). Hence one `select` / `filter` per
-  *     statement, never a merged projection.
+  *     SQLUpdater.java:166-170). The node runs the statements per row
+  *     in that order, over one row state.
   *   - within one UPDATE, every SET right-hand side sees the
-  *     PRE-statement values (SQL UPDATE semantics) — one `select` with
-  *     all branches referencing the input columns achieves this.
+  *     PRE-statement values (SQL UPDATE semantics): all of a
+  *     statement's values are computed before any is assigned.
   *   - NULL `WHERE` result must NOT fire the statement (SQL keeps only
   *     TRUE): predicates are wrapped `coalesce(p, false)` before use
   *     (SURVEY.md §7.4.4).
   *   - every SET column is cast back to its original Spark type,
   *     mirroring the reference's positional typed write-back into Avro
   *     fields (AvroSCDInputFormat.java:205-222; SURVEY.md §7.4.6).
+  *     This is also why every statement sees the same schema, so all
+  *     of them resolve in one analyzer pass.
   *   - column resolution is case-insensitive (H2 default upper-casing;
   *     Spark's default `spark.sql.caseSensitive=false` — §7.4.7).
   *
-  * Scale note: the compiled plan is a chain of projections/filters —
-  * a NARROW pipeline with zero shuffles, fully inside whole-stage
-  * codegen, through which Catalyst freely pushes outer-query filters
-  * and prunes never-referenced `when` branches (SURVEY.md §4). The DML
-  * text is parsed once on the driver and baked into serialized
-  * expressions, so a 1000-executor scan does not re-read `.updates`
-  * per task (fixes the reference's acknowledged inefficiency,
-  * README.md:233-236).
+  * Scale note: the plan is one node over the scan whatever the log's
+  * length — a NARROW pipeline with zero shuffles, planned into the
+  * scan's whole-stage codegen as one generated method per statement.
+  * Its pushdown rule moves outer filters on columns no statement SETs
+  * below it to the scan and drops SETs nobody reads, with their
+  * column dependencies (SURVEY.md §4). The DML text is parsed once on
+  * the driver and baked into serialized expressions, so a
+  * 1000-executor scan does not re-read `.updates` per task (fixes the
+  * reference's acknowledged inefficiency, README.md:233-236).
   */
 object ScdCompiler {
 
@@ -52,18 +57,18 @@ object ScdCompiler {
   /** A statement plus its optional partition guard (see [[replay]]). */
   type Step = (ScdStatement, Option[Column])
 
-  /** THE statement fold: every replay compiles here, and only here is
-    * the replay cap checked. A guarded step fires only where its guard
+  /** THE replay: every replay compiles here, and only here is the
+    * replay cap checked. A guarded step fires only where its guard
     * holds (a partition directory's log touches only its rows); the
     * guard ANDs into the predicate, so a partitioned replay stays ONE
     * narrow scan with partition pruning intact. `compat` selects
-    * [[compat]]'s error policy (unguarded steps only). */
+    * [[compat]]'s error policy. */
   private[graft] def replay(df: DataFrame, steps: Seq[Step],
       compat: Boolean = false): DataFrame = {
     guardReplaySize(df, steps.size)
-    steps.foldLeft(df) { case (d, (stmt, guard)) =>
-      if (compat) applyOneCompat(d, stmt) else applyOne(d, stmt, guard)
-    }
+    if (steps.isEmpty) df
+    else ScdReplay.plan(df, steps.map(compile(df, _)), skipErrors = compat,
+      dryRun = false)
   }
 
   /** Reference-compat error policy (O13, SQLUpdater.java:171-174): the
@@ -74,36 +79,32 @@ object ScdCompiler {
     * a row is dropped iff its WHERE predicate raises, or the predicate
     * holds and any SET expression (incl. the write-back cast) raises.
     * Rows the statement doesn't touch are never at risk — H2 does not
-    * evaluate SET expressions when the predicate is false. */
+    * evaluate SET expressions when the predicate is false, and neither
+    * does the replay node. */
   def compat(df: DataFrame, stmts: Seq[ScdStatement]): DataFrame =
     replay(df, stmts.map((_, None)), compat = true)
 
-  /** The replay plan-cost guard's conf key (VERDICT r16 #4): each
-    * statement is one chained projection/filter, and CATALYST cost —
-    * not execution — is what cliffs: measured on a 32-col table,
-    * plan build is 1.8 s at 100 statements, 3.3 s at 300, 19.6 s at
-    * 1 000 (superlinear — every analyzer/optimizer pass walks the
-    * whole chain to fixpoint), and a driver StackOverflowError at
-    * 3 000 (transform recursion depth = chain depth). Execution
-    * itself stays flat — the chain is one narrow codegen'd scan.
-    * The remedy is the log LIFECYCLE the reference itself prescribes
-    * (README.md:239-244): [[ScdReader.compact]] replays once, writes
-    * back, and `clearLog = true` truncates the sidecar; this guard
-    * makes the cliff a loud, actionable error instead of a
-    * minutes-long analyzer stall or a driver crash. Raise the conf
-    * only with the measured table above in hand. */
+  /** The replay size guard's conf key. The replay is one plan node, so
+    * plan cost is linear in the log — measured (SCALE.md, "the replay
+    * as one plan node"; 4-core VM, warm): read + plan is ~0.2 s at 100
+    * statements, ~0.9 s at 1k and ~8 s at 10k, with no stack cliff.
+    * What cliffs is driver HEAP: each statement's expressions and its
+    * generated method live on the driver while the scan's code is
+    * generated, and serialized into the task binary (~1.8 KiB per
+    * statement). A 1 GB driver (Spark's default) replays 10k statements
+    * and dies of OutOfMemoryError in code generation at 30k; a 3 GB
+    * driver replays 30k and dies at 100k. The remedy is the log
+    * LIFECYCLE the reference itself prescribes (README.md:239-244):
+    * [[ScdReader.compact]] replays once, writes back, and
+    * `clearLog = true` truncates the sidecar; this guard makes the
+    * cliff a loud, actionable error instead of a driver OOM. Raise the
+    * conf only with the driver heap for it. */
   val MaxReplayStatementsConf = "spark.graft.scd.maxReplayStatements"
 
-  /** Default cap: 250 statements ≈ 3 s of one-off plan cost. TWO
-    * -Xss-dependent stack cliffs bound it: analyzer transform
-    * recursion over the chain (default-stack spark-shell ~3k, an
-    * sbt-forked JVM ~1k), and — tighter — expression CODEGEN
-    * recursion when CollapseProject nests same-column SETs on a
-    * narrow table (observed at ~400 chained UPDATEs of one column
-    * the moment the column is actually evaluated; a count() prunes
-    * it, a write does not). 250 keeps margin under the tightest
-    * observed cliff. */
-  val MaxReplayStatementsDefault = 250
+  /** Default cap: 10 000 statements, the largest log a default 1 GB
+    * driver was measured to replay (30k exhausts it), and ~8 s of
+    * one-off plan cost. */
+  val MaxReplayStatementsDefault = 10000
 
   private def guardReplaySize(df: DataFrame, n: Int): Unit = {
     val max = df.sparkSession.conf
@@ -111,14 +112,13 @@ object ScdCompiler {
       .toInt
     if (n > max) throw new IllegalStateException(
       s"SCD replay of $n statements exceeds $MaxReplayStatementsConf=" +
-        s"$max: plan cost grows superlinearly with log length " +
-        "(measured: 19.6 s to ANALYZE 1k statements; -Xss-dependent " +
-        "stack overflow from ~400 same-column SETs in codegen, " +
-        "~1k-3k in analysis). Compact the log — " +
-        "ScdReader.compact(dir, " +
-        "out, clearLog = true) replays once, writes the result back " +
-        "and truncates the sidecar (the reference's own prescribed " +
-        "lifecycle) — or raise the conf knowingly.")
+        s"$max: every statement costs driver heap and plan time " +
+        "(measured: 10k statements take ~8 s to read and plan; 30k " +
+        "exhaust a 1 GB driver heap in code generation). Compact the " +
+        "log — ScdReader.compact(dir, out, clearLog = true) replays " +
+        "once, writes the result back and truncates the sidecar (the " +
+        "reference's own prescribed lifecycle) — or raise the conf " +
+        "knowingly.")
   }
 
   /** Predicate wrapped so NULL never fires a statement. */
@@ -128,116 +128,65 @@ object ScdCompiler {
   /** DRY-RUN statistics: how many rows each statement would touch,
     * honoring sequential composition (statement k's predicate runs
     * against statement k-1's output; a DELETE's victims stop matching
-    * later statements). The whole probe is ONE narrow projection chain
-    * + ONE aggregation pass over the table — deletes become an
-    * `__alive` flag instead of filters, so no per-statement job and no
-    * second scan. Output: (stmt_idx, verb, n_matched). */
+    * later statements). The probe is the replay node itself in its
+    * dry-run mode — each row carries the indices of the statements that
+    * fired on it, a deleted row is marked dead instead of dropped — and
+    * one aggregation of those indices, so the plan does not grow with
+    * the log and the replay cap applies as it does to a read. Output:
+    * (stmt_idx, verb, n_matched), in statement order. */
   def stats(df: DataFrame, stmts: Seq[ScdStatement]): DataFrame = {
     val spark = df.sparkSession
     if (stmts.isEmpty)
       return spark.range(0).select(col("id").as("stmt_idx"),
         lit("").as("verb"), col("id").as("n_matched"))
-    var cur = df.withColumn("__alive", lit(true))
-    stmts.zipWithIndex.foreach { case (stmt, i) =>
-      val where = stmt match {
-        case ScdUpdate(_, _, w, _) => w
-        case ScdDelete(_, w, _) => w
-      }
-      cur = cur.withColumn(s"__m_$i", col("__alive") && pred(where))
-      stmt match {
-        case u: ScdUpdate => cur = applyOne(cur, u, Some(col(s"__m_$i")))
-        case _: ScdDelete =>
-          cur = cur.withColumn("__alive", col("__alive") && !col(s"__m_$i"))
-      }
-    }
-    val aggCols = stmts.indices.map(i =>
-      sum(when(col(s"__m_$i"), 1L).otherwise(0L)).as(s"n_$i"))
-    val one = cur.agg(aggCols.head, aggCols.drop(1): _*)
-    val verbs = stmts.map {
+    guardReplaySize(df, stmts.size)
+    val hits = ScdReplay.plan(df, stmts.map(s => compile(df, (s, None))),
+      skipErrors = false, dryRun = true)
+      .select(explode(col(ScdReplay.FiredColumn)).as("i"), lit(1L).as("n"))
+    // every statement once more with weight 0, so one that fires on no
+    // row still has its row (a union, not an outer join: a count() of
+    // the result must still run the replay)
+    val every = spark.range(stmts.size)
+      .select(col("id").cast("int").as("i"), lit(0L).as("n"))
+    val verbs = typedLit(stmts.map {
       case _: ScdUpdate => "UPDATE"
       case _: ScdDelete => "DELETE"
-    }
-    val stackArgs = stmts.indices
-      .map(i => s"CAST($i AS BIGINT), '${verbs(i)}', coalesce(n_$i, 0L)")
-      .mkString(", ")
-    one.select(expr(
-      s"stack(${stmts.size}, $stackArgs) AS (stmt_idx, verb, n_matched)"))
+    })
+    hits.unionByName(every).groupBy("i").agg(sum("n").as("n"))
+      .select(col("i").cast("long").as("stmt_idx"),
+        element_at(verbs, col("i") + 1).as("verb"), col("n").as("n_matched"))
+      .orderBy("stmt_idx")
   }
 
-  private def applyOne(df: DataFrame, stmt: ScdStatement,
-      guard0: Option[Column]): DataFrame = {
+  /** One statement as the replay node takes it: the fire predicate
+    * (partition guard ANDed in) and every SET, cast back to its
+    * column's type. */
+  private def compile(df: DataFrame, step: Step): ScdReplay.Statement = {
+    val (stmt, guard) = step
     // three-valued-logic hygiene: a partition guard comparing against
-    // a NULL partition value yields NULL, and filter(!NULL) would DROP
-    // the row — a seg=A log deleting the null-partition's rows. NULL
-    // guard must mean "not my partition", i.e. false.
-    val guard = coalesce(guard0.getOrElse(lit(true)), lit(false))
+    // a NULL partition value yields NULL, and a NULL guard must mean
+    // "not my partition" (else a seg=A log's DELETE would drop the
+    // null partition's rows)
+    def fire(where: Option[String]) =
+      guard.fold(pred(where))(g => coalesce(g, lit(false)) && pred(where))
     stmt match {
       case ScdUpdate(_, sets, where, _) =>
         // a SET column that resolves to nothing is a DML bug — fail like
-        // the reference's H2 execution would (unknown column error),
-        // never silently no-op (ADVICE r01)
+        // the reference's H2 execution would (unknown column error,
+        // SQLUpdater.java:82-89), never silently no-op (ADVICE r01)
         sets.foreach { case (c, _) =>
           if (!df.schema.fields.exists(_.name.equalsIgnoreCase(c)))
             throw new IllegalStateException(
               s"UPDATE SET references unknown column '$c' " +
                 s"(schema: ${df.schema.fieldNames.mkString(", ")})")
         }
-        val p = guard && pred(where)
-        val cols = df.schema.fields.map { f =>
-          sets.collectFirst {
-            case (c, e) if c.equalsIgnoreCase(f.name) => e
-          } match {
-            case Some(e) =>
-              when(p, expr(e).cast(f.dataType))
-                .otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }
-        df.select(cols.toIndexedSeq: _*)
-      case ScdDelete(_, where, _) =>
-        df.filter(!(guard && pred(where)))
-    }
-  }
-
-  private def applyOneCompat(df: DataFrame, stmt: ScdStatement): DataFrame = {
-    import org.apache.spark.sql.graft.CatalystBridge.{evalFails, safeValue}
-    stmt match {
-      case ScdUpdate(_, sets, where, _) =>
-        // unknown SET column is a prepare-time failure in the reference
-        // (statement prepare at SQLUpdater.java:82-89), not a row skip —
-        // fail fast in compat mode too
-        sets.foreach { case (c, _) =>
-          if (!df.schema.fields.exists(_.name.equalsIgnoreCase(c)))
-            throw new IllegalStateException(
-              s"UPDATE SET references unknown column '$c'")
-        }
-        val pRaw = where.map(expr).getOrElse(lit(true))
-        val pErr = where.map(w => evalFails(expr(w))).getOrElse(lit(false))
-        val fire = coalesce(safeValue(pRaw), lit(false))
-        val setExprs = df.schema.fields.flatMap { f =>
+        ScdReplay.Statement(fire(where), df.schema.fields.toSeq.flatMap { f =>
           sets.collectFirst { case (c, e) if c.equalsIgnoreCase(f.name) =>
-            f -> expr(e).cast(f.dataType)
+            f.name -> expr(e).cast(f.dataType)
           }
-        }
-        val setErr = setExprs.map { case (_, e) => evalFails(e) }
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val rowErr = pErr || (fire && setErr)
-        val kept = df.filter(!rowErr)
-        val cols = kept.schema.fields.map { f =>
-          setExprs.collectFirst { case (g, e) if g.name == f.name =>
-            // safeValue never actually nulls here: error rows are gone
-            when(fire, safeValue(e)).otherwise(col(f.name)).as(f.name)
-          }.getOrElse(col(f.name))
-        }
-        kept.select(cols.toIndexedSeq: _*)
+        }, delete = false)
       case ScdDelete(_, where, _) =>
-        // predicate error ⇒ skip ⇒ dropped — same outcome as a firing
-        // DELETE, so: keep iff the predicate evaluates cleanly to
-        // FALSE/NULL
-        val pErr = where.map(w => evalFails(expr(w))).getOrElse(lit(false))
-        val fire = coalesce(where.map(w => safeValue(expr(w))).getOrElse(lit(true)),
-          lit(false))
-        df.filter(!(pErr || fire))
+        ScdReplay.Statement(fire(where), Nil, delete = true)
     }
   }
 }

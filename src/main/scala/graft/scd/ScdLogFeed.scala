@@ -87,7 +87,7 @@ object ScdLogFeed {
     * statement seq, not a timestamp); `n = 0` is the raw base,
     * `n >= log length` equals the `asOf = far future` time view.
     * Loaded and compiled exactly like the time-gated path — one narrow
-    * zero-shuffle projection chain over [[ScdReader.loadBase]]'s scan. */
+    * zero-shuffle replay node over [[ScdReader.loadBase]]'s scan. */
   def asOfSeq(spark: SparkSession, dir: String, n: Long,
       format: String = "parquet"): DataFrame =
     applyLogSeq(spark, ScdReader.loadBase(spark, dir, format), dir, n)

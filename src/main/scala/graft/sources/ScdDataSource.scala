@@ -41,7 +41,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
   *     ([[org.apache.spark.sql.graft.ScdRelationRewrite]]) replaces the
   *     DSv2 relation with the handle's [[ScdTable.view]] — exactly
   *     what `ScdReader.read` returns: the scan stays a zero-shuffle
-  *     codegen'd projection chain and outer filters / projections push
+  *     codegen'd replay node and outer filters / projections push
   *     all the way into the parquet/Avro scan (PushedFilters,
   *     ReadSchema, PartitionFilters — proven by ScdSqlSourceSpec).
   *     This is the same architecture Delta Lake uses for its own

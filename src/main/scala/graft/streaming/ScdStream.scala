@@ -778,7 +778,7 @@ object ScdStream {
     * is visible only once its commit marker lands.
     *
     * Scale shape: the statement fold is [[graft.scd.ScdCompiler]]'s
-    * narrow projection chain over the previous snapshot — one
+    * one narrow replay node over the previous snapshot — one
     * distributed parquet read + write per trigger, no shuffle; the
     * statements themselves are KB-scale driver metadata. */
   def materializeFromLog(spark: SparkSession, tableDir: String,

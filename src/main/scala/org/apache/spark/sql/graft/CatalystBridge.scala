@@ -7,28 +7,16 @@ import org.apache.spark.sql.{Column, SparkSession}
 
 /** Minimal access shim into `private[sql]` Catalyst plumbing (hence the
   * `org.apache.spark.sql` subpackage — the standard extension-library
-  * pattern). Used only for the reference-compat error policy: Spark has
-  * `try_add`/`try_divide`/… but no GENERIC try-wrapper in the public
-  * API, while Catalyst's `TryEval` is exactly that (it is what the
-  * `try_*` family wraps).
+  * pattern): graft's native expressions as Columns and SQL functions.
   */
 object CatalystBridge {
 
   /** `TryEval(e)`: evaluate `e`, yielding NULL instead of raising on
-    * any runtime error — codegen-friendly (TryEval has doGenCode). */
+    * any runtime error — codegen-friendly (TryEval has doGenCode).
+    * Spark has `try_add`/`try_divide`/… but no GENERIC try-wrapper in
+    * the public API; Catalyst's `TryEval` is exactly that. */
   def tryEval(c: Column): Column =
     ExpressionUtils.column(TryEval(ExpressionUtils.expression(c)))
-
-  /** Wrap `c` so the pair (errored, value) is observable: a genuine
-    * NULL value stays distinguishable from an evaluation error because
-    * the struct wrapper is only NULL when evaluation raised. */
-  def tryStruct(c: Column): Column = tryEval(struct(c.as("v")))
-
-  /** TRUE iff evaluating `c` raises at runtime. */
-  def evalFails(c: Column): Column = isnull(tryStruct(c))
-
-  /** `c`'s value, or NULL if evaluation raises. */
-  def safeValue(c: Column): Column = tryStruct(c).getField("v")
 
   /** Native codegen'd Σ aᵢ·bᵢ (see graft.functions.expressions
     * [[graft.functions.expressions.DotProduct]]). */

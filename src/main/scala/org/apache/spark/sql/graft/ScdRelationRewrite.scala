@@ -13,10 +13,11 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * re-projected onto the relation's original attribute ids so every
   * downstream reference stays valid.
   *
-  * After this rewrite the "scd table" IS a plain file-source plan plus
-  * narrow codegen'd projections — Catalyst's whole pushdown machinery
-  * (PushedFilters, column pruning, partition pruning, AQE) applies
-  * untouched, which is the property PushdownSpec locks for the Scala
+  * After this rewrite the "scd table" IS a plain file-source plan under
+  * one narrow codegen'd [[ScdReplay]] node — Catalyst's pushdown
+  * machinery (PushedFilters, column pruning, partition pruning, AQE)
+  * reaches the scan through it (its rule is [[ScdReplayPushdown]]),
+  * which is the property PushdownSpec locks for the Scala
   * API and ScdSqlSourceSpec locks through this SQL surface. Same
   * architecture as Delta Lake's rewrite of its own table node (public
   * DeltaAnalysis pattern); registered by [[graft.GraftExtensions]].

@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions._
 
 import java.nio.file.Files
 
-/** The large-log replay guard (VERDICT r16 #4): k statements compile
-  * to k chained projections whose ANALYZER cost is superlinear
-  * (measured: 1.8 s @ 100, 19.6 s @ 1 000, driver StackOverflowError
-  * near 3 000 — SCALE.md r17 decade table). The guard turns the cliff
-  * into a loud, actionable error naming the reference's own remedy
-  * (compact + truncate), overridable by conf for users who accept the
-  * plan tax knowingly. */
+/** The large-log replay guard. The replay is one plan node whose plan
+  * cost is linear in the log (SCALE.md "the replay as one plan node"),
+  * so the cap sits where that linear cost has become a cliff in its
+  * own right — see `ScdCompiler.MaxReplayStatementsDefault`. The guard
+  * turns it into a loud, actionable error naming the reference's own
+  * remedy (compact + truncate), overridable by conf for users who
+  * accept the cost knowingly. */
 class ReplaySizeGuardSpec extends SparkSpec {
 
   private def logOf(k: Int): String =
@@ -44,11 +44,14 @@ class ReplaySizeGuardSpec extends SparkSpec {
 
   test("replay at the default cap succeeds; one past it fails loud with the compaction hint") {
     val max = ScdCompiler.MaxReplayStatementsDefault
-    assert(max == 250) // the SCALE.md-measured threshold, pinned
+    assert(max == 10000) // the SCALE.md-measured threshold, pinned
     import spark.implicits._
     val base = Seq((1L, 10L)).toDF("id", "v")
     val at = UpdatesParser.parse(logOf(max), Long.MaxValue)
     assert(ScdCompiler(base, at).count() == 1) // builds, no guard trip
+    // a count() can prune the SET column; a write evaluates every SET
+    // of the same column (where the chained plan's codegen overflowed)
+    ScdCompiler(base, at).write.format("noop").mode("overwrite").save()
     val over = UpdatesParser.parse(logOf(max + 1), Long.MaxValue)
     val e = intercept[IllegalStateException] {
       ScdCompiler(base, over)

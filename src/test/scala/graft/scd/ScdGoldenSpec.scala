@@ -61,6 +61,72 @@ class ScdGoldenSpec extends SparkSpec {
     assert(got.size == 11)
   }
 
+  test("replay counters: rows updated / rows deleted, codegen'd and interpreted") {
+    def counts(asOf: String): (Long, Long, Long) = {
+      val df = ScdReader.applyLogText(spark, doctorsDf, updates, Some(asOf))
+      df.collect() // the read's own job carries the counters
+      val m = df.queryExecution.executedPlan.collect {
+        case e: org.apache.spark.sql.graft.ScdReplayExec => e.metrics
+      }
+      assert(m.size == 1, df.queryExecution.executedPlan.treeString)
+      (m.head("numUpdated").value, m.head("numDeleted").value,
+        m.head("numOutputRows").value)
+    }
+    Seq("true", "false").foreach { wholeStage =>
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        // now: Troughton updated, Colin deleted; 2014-01-01: no DELETE yet
+        assert(counts("2099-01-01") == ((1L, 1L, 10L)), s"wholeStage=$wholeStage")
+        assert(counts("2014-01-01") == ((1L, 0L, 11L)), s"wholeStage=$wholeStage")
+      } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
+  }
+
+  test("a SET to NULL on the Avro fixture's NOT NULL columns reads back NULL") {
+    // the Avro file's writer schema makes every column NOT NULL
+    val dir = Files.createTempDirectory("doctorsavro")
+    val in = getClass.getResourceAsStream("/doctors/doctors.avro")
+    try Files.copy(in, dir.resolve("doctors.avro")) finally in.close()
+    val base = graft.sources.AvroSource.read(spark, dir.toString)
+    assert(base.schema.fields.forall(!_.nullable), base.schema.treeString)
+    val log =
+      """UPDATE doctors SET last_name = NULL WHERE number = 1;
+        |UPDATE doctors SET first_name = 'Nobody' WHERE last_name IS NULL;
+        |UPDATE doctors SET number = CASE WHEN number > 3 THEN 13 END WHERE number = 3;
+        |""".stripMargin
+    Seq("true", "false").foreach { wholeStage =>
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try {
+        val df = ScdReader.applyLogText(spark, base, log)
+        val rows = df.collect().map(r => (Option(r.get(0)), r.getString(1),
+          Option(r.getString(2)))).toSet
+        assert(rows.contains((Some(1), "Nobody", None)), s"wholeStage=$wholeStage: $rows")
+        assert(rows.contains((None, "Jon", Some("Pertwee"))), s"wholeStage=$wholeStage: $rows")
+        assert(rows.size == 11)
+        assert(df.filter(col("last_name").isNull).collect()
+          .map(_.getString(1)).toSeq == Seq("Nobody"), s"wholeStage=$wholeStage")
+        assert(df.filter(col("number").isNull).count() == 1, s"wholeStage=$wholeStage")
+        assert(df.filter(col("first_name") === "Nobody").count() == 1)
+      } finally spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
+  }
+
+  test("a nondeterministic SET replays and dry-runs (evaluated once per row)") {
+    val log = "UPDATE doctors SET number = number + cast(rand() * 0 AS INT) " +
+      "WHERE number = 2;\nDELETE FROM doctors WHERE number = 2;"
+    assert(ScdReader.applyLogText(spark, doctorsDf, log).collect().length == 10)
+    val stats = ScdReader.logStatsText(spark, doctorsDf, log).collect()
+      .map(r => (r.getString(1), r.getLong(2))).toSeq
+    assert(stats == Seq(("UPDATE", 1L), ("DELETE", 1L)))
+    // it runs before every statement, so it may not read an earlier SET
+    val e = intercept[IllegalStateException] {
+      ScdReader.applyLogText(spark, doctorsDf,
+        "UPDATE doctors SET first_name = 'X' WHERE number = 1;\n" +
+          "UPDATE doctors SET last_name = shuffle(array(first_name))[0];")
+    }
+    assert(e.getMessage.contains("earlier statement SETs"), e.getMessage)
+  }
+
   test("golden #3 — scd.time=-1: raw 11 rows unchanged") {
     assert(resultSet(Some("-1")) == rawSet)
   }

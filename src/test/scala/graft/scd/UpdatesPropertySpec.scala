@@ -191,6 +191,27 @@ class UpdatesPropertySpec extends SparkSpec {
     }
   }
 
+  test("property: interpreted replay (codegen off) == codegen'd replay, all three modes") {
+    val errLog = Seq[ScdStatement](
+      ScdUpdate("tbl", Seq("a" -> "10 div (b - 2)"), Some("a > 1"), 0L),
+      ScdDelete("tbl", Some("10 div (a - 3) > 4"), 0L))
+    forAll(Gen.zip(genRows, genIntLog), n = 10) { case (rows, stmts) =>
+      val df = spark.createDataFrame(
+        rows.map { case (a, b) => Row(a, b) }.asJava, schema)
+      def run(): Seq[Seq[Seq[Any]]] =
+        Seq(ScdCompiler(df, stmts), ScdCompiler.compat(df, stmts ++ errLog),
+          ScdCompiler.stats(df, stmts).drop("verb"))
+          .map(_.collect().map(_.toSeq).toSeq.sortBy(_.toString))
+      val codegen = run()
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      val interpreted = try run()
+        finally spark.conf.unset("spark.sql.codegen.wholeStage")
+      assert(interpreted == codegen)
+      assert(codegen.head.map(r => (r(0), r(1))).sortBy(_.toString) ==
+        simulate(rows, stmts).sortBy(_.toString))
+    }
+  }
+
   test("property: empty log is identity; unconditional DELETE empties") {
     forAll(genRows, n = 8) { rows =>
       val df = spark.createDataFrame(

@@ -15,4 +15,18 @@ import org.apache.spark.sql.SparkSession
 object TestBridge {
   def waitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A session on `spark`'s context and shared state whose extensions
+    * are empty — what a session built without `GraftExtensions` (or any
+    * `spark.sql.extensions`) looks like. The constructor is private to
+    * Spark, hence reflection. */
+  def sessionWithoutExtensions(spark: SparkSession): SparkSession = {
+    val c = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    classOf[org.apache.spark.sql.classic.SparkSession].getConstructors
+      .find(_.getParameterCount == 6).get
+      .newInstance(c.sparkContext, Some(c.sharedState), None,
+        new org.apache.spark.sql.SparkSessionExtensions,
+        Map.empty[String, String], Map.empty[String, String])
+      .asInstanceOf[SparkSession]
+  }
 }
