@@ -179,6 +179,12 @@ object SparkEntry {
       cache: scala.collection.concurrent.TrieMap[(String, String), String],
       kind: String, appId: String): Unit = {
     cache.filterInPlace((k, _) => k._1 == appId)
+    evictDeadAppDirs(kind, appId)
+  }
+
+  /** The on-disk half of [[evictDeadApps]], for artifact kinds that are
+    * rewritten on every call and so have no memo. */
+  private def evictDeadAppDirs(kind: String, appId: String): Unit = {
     val root = new java.io.File("target/graft-index")
     val live = s"$kind-$appId-"
     val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
@@ -314,76 +320,7 @@ object SparkEntry {
   // queries
   // ---------------------------------------------------------------------
 
-  /** Bench-honesty guard (VERDICT r15 #7): an always-true filter that
-    * references EVERY output column, so Bench's `count()` action cannot
-    * prune any of the query's declared work (Catalyst drops unreferenced
-    * value expressions — pure projections AND unused aggregate sums —
-    * leaving a column-less scan that benches ~0 s; q_pii_audit read
-    * 0.25 s instead of its real ~7 s at sf10 for three rounds this way).
-    * `hash` never returns NULL (null inputs hash into the seed) and any
-    * int is >= Int.MinValue, so no row is ever dropped and every oracle
-    * replays unchanged. PlanAuditSpec's bench-honesty lint both enforces
-    * coverage of this set and fails loudly if a future optimizer learns
-    * to fold the guard away.
-    *
-    * The `rand(42) * 0` term makes the predicate NON-DETERMINISTIC on
-    * purpose (it never changes the value): Catalyst pushes a
-    * deterministic filter below the query's final Project by INLINING
-    * every referenced alias, so the guard would otherwise carry a full
-    * copy of the output expression tree — and conditional branches
-    * (CASE argmax chains) escape codegen subexpression elimination, so
-    * the copy really executes. Measured on text_langid at sf0.1: 4.9 s
-    * with the pushable guard vs ~1.2 s with the filter held ABOVE the
-    * projection, where it references plain attributes and every output
-    * expression is computed exactly once. */
-  private def honest(df: DataFrame): DataFrame =
-    df.where(hash(df.columns.map(col) :+
-      (rand(42) * 0).cast("int"): _*) >= lit(Int.MinValue))
-
-  /** Rows whose natural shape is count()-prunable (pass-through or
-    * output-only value columns): the PlanAuditSpec lint "no board query
-    * is count()-pruned at the scan" is the authority — a new row that
-    * fails it either joins this set or carries its own always-true
-    * output-referencing filter (the q_pii_audit template). */
-  private val benchHonestWrap: Set[String] = Set(
-    "asof_join_events", "asof_join_fwd", "asof_join_nearest",
-    "asof_join_slim", "dedup_exact", "dedup_scrub", "dedup_survivor",
-    "dedup_winnow", "mm_binary_meta", "mm_pipeline", "q1_pricing_summary",
-    "q5_local_volume", "q_above_avg", "q_approx_distinct_hll",
-    "q_approx_quantile_bound", "q_bloom_anti", "q_bloom_semi",
-    "q_bloomskip_point", "q_chunk_sliding", "q_chunk_text", "q_cube",
-    "q_date_agg", "q_decontaminate", "q_decontaminate_indexed",
-    "q_decontaminate_ladder", "q_decontaminate_near_indexed",
-    "q_decontaminate_sem", "q_decontaminate_sem_indexed",
-    "q_distinct_agg", "q_dynamic_file_prune", "q_event_buckets",
-    "q_zorder_key", "q_hilbert_key", "q_pii_audit", "q_pii_audit_agg",
-    "q_pii_gate", "q_fim", "text_bpe_encode", "text_bpe_gpt2",
-    "text_bpe_indexed", "text_unigram_encode",
-    "q_graph_pagerank_warm", "q_hdr_incremental", "q_json_props",
-    "q_kmv_distinct", "q_ntile", "q_outer_join", "q_pack_append",
-    "q_pack_bpe", "q_pack_chunks", "q_pack_epoch", "q_percentile",
-    "q_pivot_status", "q_robots_filter", "q_robots_patterns", "q_rollup",
-    "q_salted_join", "q_scalar_fns", "q_shard_order", "q_source_gini",
-    "q_source_pareto", "q_string_agg", "q_token_counts",
-    "q_tokenizer_fertility", "q_window_running", "q_winsorize",
-    "q_zonemap_scan", "scd2_reconstruct", "scd_asof_future",
-    "scd_asof_now", "scd_asof_past", "scd_catalog_travel", "scd_compact",
-    "scd_disabled", "scd_enrich_asof", "scd_fact_join", "scd_history",
-    "scd_merge_upsert", "scd_partitioned", "scd_sequential",
-    "scd_sidecar", "scd_sql_add_update", "scd_sql_conf", "scd_sql_source",
-    "scd_sql_view", "sim_kmeans", "sim_rp_project", "text_dsir_gate_audit",
-    "text_entropy", "text_fingerprint", "text_gopher_rules",
-    "text_html_extract", "text_langid", "text_line_dedup", "text_pii",
-    "text_quality", "text_sentences", "text_stats", "text_wordpiece")
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rawQueries.map { case (n, f) =>
-      if (benchHonestWrap(n))
-        n -> ((s: SparkSession, d: String) => honest(f(s, d)))
-      else n -> f
-    }
-
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- relational surface (Hive-provided in the reference, §2.2) ----
     "q1_pricing_summary" -> ((s, dir) => {
       t(s, dir, "lineitem")
@@ -1895,8 +1832,7 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // the audit's corpus TOTALS (bench honesty rides the shared
-    // honest() wrap — benchHonestWrap — like every other row)
+    // the audit's corpus TOTALS
     "q_pii_audit_agg" -> ((s, dir) => {
       TextAnalysis.piiAudit(piiAuditInjected(t(s, dir, "documents")))
         .agg(
@@ -2703,8 +2639,10 @@ object SparkEntry {
     // the query (byteBpeEncode itself is alphabet-agnostic and
     // case-preserving; unicode byte decomposition is spec-pinned)
     "text_bpe_gpt2" -> ((s, dir) => {
-      val p = new java.io.File(indexPath("gpt2merges",
-        s.sparkContext.applicationId, dir), "merges.txt")
+      val appId = s.sparkContext.applicationId
+      evictDeadAppDirs("gpt2merges", appId)
+      val p = new java.io.File(indexPath("gpt2merges", appId, dir),
+        "merges.txt")
       p.getParentFile.mkdirs()
       java.nio.file.Files.write(p.toPath,
         ("#version: 0.2\n" + Gpt2FixtureMerges.map { case (l, r) =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,17 +9,11 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the deployment conf every graft cluster sets
-      // (spark.sql.extensions=graft.GraftExtensions): native functions
-      // in SQL + the format("scd") analysis rewrite
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    // with GraftExtensions, the deployment conf every graft cluster
+    // sets (spark.sql.extensions=graft.GraftExtensions): native
+    // functions in SQL + the format("scd") analysis rewrite
+    val spark = GraftSession.local(GraftSession.cpus)
+      .withExtensions(new GraftExtensions).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

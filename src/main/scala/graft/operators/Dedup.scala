@@ -1463,19 +1463,10 @@ object Dedup {
     * docs negligible while staying replayable in any SQL engine
     * (md5 + substr). */
   def minHashSignatures(sh: DataFrame, id: String = "doc_id",
-      numHashes: Int = 16, dictShingles: Boolean = false): DataFrame = {
+      numHashes: Int = 16): DataFrame = {
     val nSeeds = (numHashes + 3) / 4
-    def hashed(src: DataFrame, keep: Column): DataFrame =
-      src.select(keep +: (0 until nSeeds).map(sd =>
-        Sketch.md5Hex(concat(lit(s"$sd|"), col("shingle"))).as(s"h$sd")): _*)
-    // dictShingles: hash each DISTINCT shingle once, join the hash
-    // columns back (same trade as simHash's dictVocab — use when the
-    // shingle space is closed/small; identical output)
-    val withH =
-      if (dictShingles)
-        sh.join(hashed(sh.select(col("shingle")).distinct(), col("shingle")),
-          Seq("shingle"))
-      else hashed(sh, col(id))
+    val withH = sh.select(col(id) +: (0 until nSeeds).map(sd =>
+      Sketch.md5Hex(concat(lit(s"$sd|"), col("shingle"))).as(s"h$sd")): _*)
     val aggs = (0 until numHashes).map(i =>
       min(substring(col(s"h${i / 4}"), (i % 4) * 8 + 1, 8)).as(s"m$i"))
     withH.groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
@@ -1559,12 +1550,10 @@ object Dedup {
     * quadratic blowup never materializes. Output like jaccardPairs. */
   def minhashLshPairs(docs: DataFrame, id: String = "doc_id",
       textCol: String = "text", w: Int = 3, numHashes: Int = 16,
-      bands: Int = 4, threshold: Double = 0.8,
-      dictShingles: Boolean = false): DataFrame = {
+      bands: Int = 4, threshold: Double = 0.8): DataFrame = {
     val arr = shingleArrays(docs, id, textCol, w)
     val sh = shingles(docs, id, textCol, w)
-    val cands = lshCandidates(
-      minHashSignatures(sh, id, numHashes, dictShingles), id,
+    val cands = lshCandidates(minHashSignatures(sh, id, numHashes), id,
       numHashes, bands)
     // r17 note: candidate-pruning the verify side (the semi-join
     // [[minhashLshPairsIncremental]] uses) was tried and MEASURED
@@ -1650,15 +1639,6 @@ object Dedup {
       threshold)
   }
 
-  /** SimHash over tokens: bit b is the sign of Σ_tokens (2·hbit−1)
-    * where hbit is bit b of md5(token)'s 128-bit value (4 bits per hex
-    * digit, MSB first). Output: id, simhash ('0'/'1' string of length
-    * `bits`, MSB first). Narrow + one map-side-combinable groupBy.
-    *
-    * 64 bits (round-1 lesson): a 16-bit simhash degenerated — banding
-    * keys of 4 bits gave 16 buckets/band and flagged 14.5% of ALL
-    * pairs as near-dups. 64 bits with 16-bit band keys keeps bucket
-    * collision probability ≈ 2^-16 per band for unrelated docs. */
   /** per hex-digit value v (0..15): its 4 bits spread to 16-bit lanes,
     * so ONE BIGINT sum per digit accumulates all 4 bit-counts
     * (lane k = count of bit (3-k) set). Packing bound: 65535 tokens per
@@ -1674,22 +1654,18 @@ object Dedup {
     * 65k tokens already saturate a 64-bit near-dup signature. */
   private[graft] val MaxSimhashTokens: Int = 65535
 
-  /** @param dictVocab hash each DISTINCT token once and join the
-    *        per-token digit packs back to the occurrences (AQE
-    *        broadcasts the dictionary when it fits), instead of one md5
-    *        per occurrence. Identical output. Measured at sf0.1
-    *        (31-token vocab): ~6% faster — md5-per-occurrence is no
-    *        longer the bottleneck once 4 sub-hashes share one md5, so
-    *        this knob only matters for closed vocabularies with heavy
-    *        repetition; keep the default inline hashing for
-    *        open-vocabulary text at scale, where a non-broadcastable
-    *        dictionary would force a shuffle of every occurrence (the
-    *        same measurement showed the shingle-dictionary variant of
-    *        minhash LOSING 10% — long shingle strings cost more to
-    *        join than to hash). */
+  /** SimHash over tokens: bit b is the sign of Σ_tokens (2·hbit−1)
+    * where hbit is bit b of md5(token)'s 128-bit value (4 bits per hex
+    * digit, MSB first), one md5 per token occurrence. Output: id,
+    * simhash (the `bits` bits packed into one long, MSB first). Narrow
+    * + one map-side-combinable groupBy.
+    *
+    * 64 bits (round-1 lesson): a 16-bit simhash degenerated — banding
+    * keys of 4 bits gave 16 buckets/band and flagged 14.5% of ALL
+    * pairs as near-dups. 64 bits with 16-bit band keys keeps bucket
+    * collision probability ≈ 2^-16 per band for unrelated docs. */
   def simHash(docs: DataFrame, id: String = "doc_id",
-      textCol: String = "text", bits: Int = 64,
-      dictVocab: Boolean = false): DataFrame = {
+      textCol: String = "text", bits: Int = 64): DataFrame = {
     require(bits >= 1 && bits <= 64,
       s"packed-long signatures hold at most 64 bits, requested $bits")
     val nDigits = (bits + 3) / 4
@@ -1701,19 +1677,12 @@ object Dedup {
     val tok = Fan.out(docs).select(col(id),
       explode(slice(split(lower(col(textCol)), " "), 1, MaxSimhashTokens))
         .as("t"))
-    def digitPacks(src: DataFrame, keep: Column): DataFrame =
-      src.withColumn("h", Sketch.md5Hex(col("t")))
-        .select(keep +: (0 until nDigits).map { d =>
-          element_at(spreadArr,
-            instr(lit("0123456789abcdef"), substring(col("h"), d + 1, 1)))
-            .as(s"p$d")
-        }: _*)
-    val packed =
-      if (dictVocab) {
-        val vocab = digitPacks(tok.select(col("t")).distinct(), col("t"))
-        tok.join(vocab, Seq("t"))
-          .select(col(id) +: (0 until nDigits).map(d => col(s"p$d")): _*)
-      } else digitPacks(tok, col(id))
+    val packed = tok.withColumn("h", Sketch.md5Hex(col("t")))
+      .select(col(id) +: (0 until nDigits).map { d =>
+        element_at(spreadArr,
+          instr(lit("0123456789abcdef"), substring(col("h"), d + 1, 1)))
+          .as(s"p$d")
+      }: _*)
     val sums = packed.groupBy(col(id)).agg(
       count(lit(1)).as("n"),
       (0 until nDigits).map(d => sum(col(s"p$d")).as(s"s$d")): _*)
@@ -1770,9 +1739,8 @@ object Dedup {
     * whole candidate pipeline ships only (id, long) pairs. */
   def simhashPairs(docs: DataFrame, id: String = "doc_id",
       textCol: String = "text", bits: Int = 64,
-      maxDist: Int = 3, maxBucket: Int = 1000,
-      dictVocab: Boolean = false): DataFrame =
-    sigHammingPairs(simHash(docs, id, textCol, bits, dictVocab),
+      maxDist: Int = 3, maxBucket: Int = 1000): DataFrame =
+    sigHammingPairs(simHash(docs, id, textCol, bits),
       id, "simhash", bits, maxDist, maxBucket)
 
   /** The banding+verify half of [[simhashPairs]], over ANY packed-long

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -403,12 +404,7 @@ object AdvCorpus {
 
   def main(args: Array[String]): Unit = {
     val Array(outDir, which) = args.take(2)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     write(spark, outDir, which)
     spark.stop()

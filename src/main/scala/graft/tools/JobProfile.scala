@@ -1,30 +1,24 @@
 package graft.tools
 
+import graft.{Bench, GraftExtensions, GraftSession}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Optimization-round receipt tool: run one board query end-to-end
-  * (after one untimed warm-up, Bench-style) and report how many
-  * driver JOBS and tasks its timed execution launched, plus wall
-  * time. The serialized-job count is the per-serve fixed cost the
-  * incremental-family work targets (VERDICT r17 #1a: "count jobs
-  * before/after").
+  * through [[graft.Bench.action]] (after one untimed warm-up,
+  * Bench-style) and report how many driver JOBS and tasks its timed
+  * execution launched, plus wall time. The serialized-job count is
+  * the per-serve fixed cost the incremental-family work targets
+  * (VERDICT r17 #1a: "count jobs before/after").
   *
   * Usage: runMain graft.tools.JobProfile <sfDir> <q1,q2,...>
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
+      .withExtensions(new GraftExtensions).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     val tasks = new AtomicLong(0L)
@@ -54,14 +48,14 @@ object JobProfile {
     }
     names.split(",").foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      fn(spark, sfDir).count() // warm-up: JIT + memoized index builds
+      Bench.action(fn(spark, sfDir)) // warm-up: JIT + memoized index builds
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(true))
       System.gc()
       jobs.set(0); tasks.set(0L)
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
+      Bench.action(fn(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
       // listener bus is async (and its drain API is private[spark]):
       // a short settle keeps the counters complete for a receipt tool

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{GraftExtensions, GraftSession}
 
 /** Re-mint AdversarialSweepSpec pins: writes the named corpus, runs
   * each board query against it, prints `name<TAB>resultHash` lines.
@@ -10,13 +10,8 @@ import org.apache.spark.sql.SparkSession
 object MintPins {
   def main(args: Array[String]): Unit = {
     val Array(which, namesCsv) = args.take(2)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(8)
+      .withExtensions(new GraftExtensions).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = java.nio.file.Files
       .createTempDirectory(s"mint-$which").toString

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-factor amplifier for headroom benchmarking: replicate a
@@ -49,15 +50,10 @@ object ScaleGen {
     }.getOrElse(0)
     require(zipfArg.isEmpty || zipfV >= 2,
       s"zipf vocab must be >= 2: $zipfV")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.local(GraftSession.cpus)
       // events.parquet carries TIMESTAMP(NANOS): pass it through as
       // raw nanos (BIGINT) — SparkEntry.events handles both encodings
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -98,7 +99,7 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val baseRate = args.headOption.map(_.toLong).getOrElse(5000L)
     val seconds = args.lift(1).map(_.toInt).getOrElse(15)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = GraftSession.cpus
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // keyed-state paths checkpoint every batch; RocksDB is the
     // production at-scale store (incremental changelog commits vs the
@@ -107,11 +108,7 @@ object StreamBench {
     // records the delta on the commit-bound neardup path.
     val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
       .toLowerCase
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.local(cpus)
     if (stateStore == "rocksdb") {
       builder.config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +

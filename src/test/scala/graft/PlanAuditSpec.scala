@@ -158,18 +158,12 @@ class PlanAuditSpec extends SparkSpec {
 
   private case class Audit(plan: String, maxUnpartWin: Int,
       fullScan: Map[String, Set[String]],
-      countedScan: Map[String, Set[String]])
+      benchedScan: Map[String, Set[String]])
 
-  // One construction pass for every lint below. A registered
-  // QueryExecutionListener additionally captures CONSTRUCTION-TIME
-  // executions (driver-finish statistics — mannWhitneyU, spearman,
-  // chi², krippendorff — run their whole pipeline inside query
-  // construction and return a LocalRelation; without the listener
-  // their plans would be invisible to every audit here, which is
-  // exactly how the r11 single-task rank windows shipped unseen).
-  private lazy val audits: Map[String, Audit] = {
-    // print full metadata so ReadSchema/Location never truncate away
-    spark.conf.set("spark.sql.maxMetadataStringLength", "4096")
+  /** Runs `body` under a QueryExecutionListener and returns its value
+    * with every query execution it ran, listener bus drained. */
+  private def capturing[T](body: => T)
+      : (T, List[org.apache.spark.sql.execution.QueryExecution]) = {
     val captured =
       scala.collection.mutable.ArrayBuffer.empty[
         org.apache.spark.sql.execution.QueryExecution]
@@ -184,23 +178,39 @@ class PlanAuditSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      SparkEntry.queries.map { case (name, fn) =>
-        captured.synchronized(captured.clear())
-        val df = fn(spark, dir)
-        val finalPlan = df.queryExecution.executedPlan
-        // Bench's action is count() — plan the SAME shape (planning
-        // only, nothing executes) so the honesty lint below sees
-        // exactly what the board times
-        val countedPlan =
-          df.groupBy().count().queryExecution.executedPlan
-        org.apache.spark.sql.graft.TestBridge.waitListenerBus(spark)
-        val all = captured.synchronized(captured.toList)
-          .map(_.executedPlan) :+ finalPlan
-        name -> Audit(finalPlan.toString,
-          all.map(unpartitionedWindows).max,
-          scanColumns(finalPlan), scanColumns(countedPlan))
-      }
+      val v = body
+      org.apache.spark.sql.graft.TestBridge.waitListenerBus(spark)
+      (v, captured.synchronized(captured.toList))
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Parquet columns read by the plans Bench's timed action executes
+    * on `df` — it runs, on the sf0.001 fixture, so the lint sees
+    * exactly what the board times. */
+  private def benchedScanColumns(df: org.apache.spark.sql.DataFrame)
+      : Map[String, Set[String]] =
+    scanColumns(capturing(Bench.action(df))._2.map(_.executedPlan): _*)
+
+  // One construction pass for every lint below. The listener
+  // additionally captures CONSTRUCTION-TIME executions (driver-finish
+  // statistics — mannWhitneyU, spearman, chi², krippendorff — run
+  // their whole pipeline inside query construction and return a
+  // LocalRelation; without the listener their plans would be
+  // invisible to every audit here, which is exactly how the r11
+  // single-task rank windows shipped unseen).
+  private lazy val audits: Map[String, Audit] = {
+    // print full metadata so ReadSchema/Location never truncate away
+    spark.conf.set("spark.sql.maxMetadataStringLength", "4096")
+    SparkEntry.queries.map { case (name, fn) =>
+      val ((df, finalPlan), construction) = capturing {
+        val df = fn(spark, dir)
+        (df, df.queryExecution.executedPlan)
+      }
+      val all = construction.map(_.executedPlan) :+ finalPlan
+      name -> Audit(finalPlan.toString,
+        all.map(unpartitionedWindows).max,
+        scanColumns(finalPlan), benchedScanColumns(df))
+    }
   }
 
   private lazy val plans: Map[String, String] =
@@ -219,27 +229,28 @@ class PlanAuditSpec extends SparkSpec {
     (p +: kids.flatMap(allNodes)) ++ p.subqueries.flatMap(allNodes)
   }
 
-  /** Parquet columns actually read, per table location — the ground
-    * truth for what a plan pays at the scan. Partition columns ride
-    * along in `output`; both sides of a comparison include them
-    * identically, so they never produce a spurious diff. */
-  private def scanColumns(p: org.apache.spark.sql.execution.SparkPlan)
+  /** Parquet columns actually read by the plans, per table location
+    * — the ground truth for what a plan pays at the scan. Partition
+    * columns ride along in `output`; both sides of a comparison
+    * include them identically, so they never produce a spurious
+    * diff. */
+  private def scanColumns(ps: org.apache.spark.sql.execution.SparkPlan*)
       : Map[String, Set[String]] =
-    allNodes(p).collect {
+    ps.flatMap(allNodes).collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.relation.location.rootPaths.mkString(",") ->
           f.output.map(_.name).toSet
     }.groupBy(_._1).view
       .mapValues(_.flatMap(_._2).toSet).toMap
 
-  /** Scan columns the full plan reads but the counted plan dropped —
-    * non-empty means Bench's count() action would NOT pay for this
+  /** Scan columns the full plan reads but the timed plan dropped —
+    * non-empty means an action timed that way would NOT pay for this
     * query's declared work (VERDICT r15 #7: three rounds of
-    * whack-a-mole on exactly this class). */
+    * whack-a-mole on exactly this class, when Bench timed count()). */
   private def countPruned(full: Map[String, Set[String]],
-      counted: Map[String, Set[String]]): Seq[String] =
+      timed: Map[String, Set[String]]): Seq[String] =
     full.toSeq.flatMap { case (path, cols) =>
-      val missing = cols -- counted.getOrElse(path, Set.empty)
+      val missing = cols -- timed.getOrElse(path, Set.empty)
       if (missing.isEmpty) None
       else Some(s"${path.replaceAll(".*/", "")}: lost ${missing.toSeq.sorted.mkString(",")}")
     }
@@ -394,24 +405,22 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   // ---- bench honesty as a LINT (VERDICT r15 #7) -------------------
-  // Bench times `df.count()`, and Catalyst prunes ANY value expression
-  // the count doesn't need — pure projections and unused aggregate
-  // sums alike — so a query without an output-referencing always-true
-  // filter silently benches a column-less scan instead of its real
-  // work (q_pii_audit read 0.25 s instead of ~7 s at sf10 for three
-  // rounds). This lint ends the convention-by-memory: under the
-  // count() action every query must still READ every parquet column
-  // its full plan reads. A new projection-shaped row that forgets the
-  // honesty filter fails here, not in a judge's sf10 re-measure.
+  // An action that needs fewer columns than the query outputs lets
+  // Catalyst prune every value expression it doesn't need — `count()`
+  // drops pure projections and unused aggregate sums alike, leaving a
+  // column-less scan (q_pii_audit benched 0.25 s instead of ~7 s at
+  // sf10 for three rounds that way). Bench therefore times a write of
+  // every column to the `noop` sink ([[Bench.action]]); this lint runs
+  // that action on every board query and checks it READS every parquet
+  // column the query's full plan reads.
   test("no board query is count()-pruned at the scan (bench honesty)") {
     val over = audits.flatMap { case (n, a) =>
-      val lost = countPruned(a.fullScan, a.countedScan)
+      val lost = countPruned(a.fullScan, a.benchedScan)
       if (lost.isEmpty) None else Some(s"$n: ${lost.mkString("; ")}")
     }
     assert(over.isEmpty,
       s"""queries whose bench number would NOT pay their declared work
-         |(add the always-true output-referencing filter — see
-         |q_pii_audit in SparkEntry for the template):
+         |(Bench.action must write every output column):
          |${over.toSeq.sorted.mkString("\n")}""".stripMargin)
   }
 
@@ -426,20 +435,11 @@ class PlanAuditSpec extends SparkSpec {
       sig(pruned.groupBy().count()))
     assert(lostP.exists(_.contains("text")),
       s"lint failed to flag the pruned fixture: $lostP")
-    // the fix template (SparkEntry.honest): an always-true filter
-    // referencing EVERY output column — hash never returns NULL and
-    // any int >= Int.MinValue, so no row is dropped. The rand(42)*0
-    // term keeps the predicate non-deterministic so it is NOT pushed
-    // below the projection (pushdown would inline a full copy of the
-    // output expression tree into the filter — duplicated work that
-    // conditional branches hide from codegen subexpression
-    // elimination; measured 4.9 s vs 1.2 s on text_langid)
-    val honest = pruned.where(
-      hash(pruned.columns.map(col) :+
-        (rand(42) * 0).cast("int"): _*) >= lit(Int.MinValue))
-    val lostH = countPruned(sig(honest),
-      sig(honest.groupBy().count()))
-    assert(lostH.isEmpty, s"honest fixture still flagged: $lostH")
+    // Bench's own action on the same fixture pays for `text`
+    val benched = benchedScanColumns(pruned)
+    assert(benched.values.exists(_.contains("text")),
+      s"Bench.action did not read text: $benched")
+    assert(countPruned(sig(pruned), benched).isEmpty)
   }
 
   // VERDICT r16 #1: the built-in `percentile()` (and its `median()`

@@ -439,20 +439,6 @@ class DedupSpec extends SparkSpec {
     assert(!byPair.keySet.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
-  test("dictionary hashing variants are output-identical to inline") {
-    val simInline = Dedup.simHash(docs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val simDict = Dedup.simHash(docs, dictVocab = true).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(simDict == simInline)
-    def pairs(d: org.apache.spark.sql.DataFrame) =
-      d.select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs(Dedup.minhashLshPairs(docs, threshold = 0.8,
-        dictShingles = true)) ==
-      pairs(Dedup.minhashLshPairs(docs, threshold = 0.8)))
-  }
-
   test("simHashColumn (per-row, streaming-safe) equals the groupBy simHash") {
     val byAgg = Dedup.simHash(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
