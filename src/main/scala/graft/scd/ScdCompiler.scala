@@ -52,23 +52,27 @@ object ScdCompiler {
     apply(df, log.statements)
 
   def apply(df: DataFrame, stmts: Seq[ScdStatement]): DataFrame =
-    replay(df, stmts.map((_, None)))
+    replay(df, stmts.map((_, Nil)))
 
-  /** A statement plus its optional partition guard (see [[replay]]). */
-  type Step = (ScdStatement, Option[Column])
+  /** A statement plus the partition spec of the log it came from
+    * (empty for the root log; see [[replay]]). */
+  type Step = (ScdStatement, Seq[(String, String)])
 
   /** THE replay: every replay compiles here, and only here is the
-    * replay cap checked. A guarded step fires only where its guard
-    * holds (a partition directory's log touches only its rows); the
-    * guard ANDs into the predicate, so a partitioned replay stays ONE
-    * narrow scan with partition pruning intact. `compat` selects
-    * [[compat]]'s error policy. */
+    * replay cap checked. A step from a partition directory's log fires
+    * only where its partition guard holds (that log touches only its
+    * rows); the guard ANDs into the predicate, so a partitioned replay
+    * stays ONE narrow scan with partition pruning intact. `compat`
+    * selects [[compat]]'s error policy. `memo` holds the table's
+    * resolved steps when `df` is an instance of its base (see
+    * [[ScdTableState]]); the steps it lacks resolve in one pass. */
   private[graft] def replay(df: DataFrame, steps: Seq[Step],
-      compat: Boolean = false): DataFrame = {
+      compat: Boolean = false,
+      memo: Option[ScdReplay.Memo] = None): DataFrame = {
     guardReplaySize(df, steps.size)
     if (steps.isEmpty) df
     else ScdReplay.plan(df, steps.map(compile(df, _)), skipErrors = compat,
-      dryRun = false)
+      dryRun = false, memo = memo)
   }
 
   /** Reference-compat error policy (O13, SQLUpdater.java:171-174): the
@@ -82,7 +86,7 @@ object ScdCompiler {
     * evaluate SET expressions when the predicate is false, and neither
     * does the replay node. */
   def compat(df: DataFrame, stmts: Seq[ScdStatement]): DataFrame =
-    replay(df, stmts.map((_, None)), compat = true)
+    replay(df, stmts.map((_, Nil)), compat = true)
 
   /** The replay size guard's conf key. The replay is one plan node, so
     * plan cost is linear in the log — measured (SCALE.md, "the replay
@@ -140,7 +144,7 @@ object ScdCompiler {
       return spark.range(0).select(col("id").as("stmt_idx"),
         lit("").as("verb"), col("id").as("n_matched"))
     guardReplaySize(df, stmts.size)
-    val hits = ScdReplay.plan(df, stmts.map(s => compile(df, (s, None))),
+    val hits = ScdReplay.plan(df, stmts.map(s => compile(df, (s, Nil))),
       skipErrors = false, dryRun = true)
       .select(explode(col(ScdReplay.FiredColumn)).as("i"), lit(1L).as("n"))
     // every statement once more with weight 0, so one that fires on no
@@ -158,35 +162,50 @@ object ScdCompiler {
       .orderBy("stmt_idx")
   }
 
+  /** `col = value` conjunction for a partition spec; Hive renders a
+    * NULL partition value as the default-partition sentinel. Partition
+    * values come from the path as strings — compare through a string
+    * cast, which matches Hive/Spark's own path rendering for the
+    * scalar partition types. */
+  private def partitionGuard(spec: Seq[(String, String)]): Column =
+    spec.map { case (k, v) =>
+      if (v == "__HIVE_DEFAULT_PARTITION__") col(k).isNull
+      else col(k).cast("string") === lit(v)
+    }.reduce(_ && _)
+
   /** One statement as the replay node takes it: the fire predicate
     * (partition guard ANDed in) and every SET, cast back to its
-    * column's type. */
+    * column's type; the step itself is its memo key. */
   private def compile(df: DataFrame, step: Step): ScdReplay.Statement = {
-    val (stmt, guard) = step
+    val (stmt, spec) = step
     // three-valued-logic hygiene: a partition guard comparing against
     // a NULL partition value yields NULL, and a NULL guard must mean
     // "not my partition" (else a seg=A log's DELETE would drop the
     // null partition's rows)
     def fire(where: Option[String]) =
-      guard.fold(pred(where))(g => coalesce(g, lit(false)) && pred(where))
+      if (spec.isEmpty) pred(where)
+      else coalesce(partitionGuard(spec), lit(false)) && pred(where)
     stmt match {
       case ScdUpdate(_, sets, where, _) =>
-        // a SET column that resolves to nothing is a DML bug — fail like
-        // the reference's H2 execution would (unknown column error,
-        // SQLUpdater.java:82-89), never silently no-op (ADVICE r01)
-        sets.foreach { case (c, _) =>
-          if (!df.schema.fields.exists(_.name.equalsIgnoreCase(c)))
-            throw new IllegalStateException(
-              s"UPDATE SET references unknown column '$c' " +
-                s"(schema: ${df.schema.fieldNames.mkString(", ")})")
-        }
-        ScdReplay.Statement(fire(where), df.schema.fields.toSeq.flatMap { f =>
-          sets.collectFirst { case (c, e) if c.equalsIgnoreCase(f.name) =>
-            f.name -> expr(e).cast(f.dataType)
+        new ScdReplay.Statement(delete = false, key = step)({
+          // a SET column that resolves to nothing is a DML bug — fail
+          // like the reference's H2 execution would (unknown column
+          // error, SQLUpdater.java:82-89), never silently no-op (ADVICE
+          // r01)
+          sets.foreach { case (c, _) =>
+            if (!df.schema.fields.exists(_.name.equalsIgnoreCase(c)))
+              throw new IllegalStateException(
+                s"UPDATE SET references unknown column '$c' " +
+                  s"(schema: ${df.schema.fieldNames.mkString(", ")})")
           }
-        }, delete = false)
+          (fire(where), df.schema.fields.toSeq.flatMap { f =>
+            sets.collectFirst { case (c, e) if c.equalsIgnoreCase(f.name) =>
+              f.name -> expr(e).cast(f.dataType)
+            }
+          })
+        })
       case ScdDelete(_, where, _) =>
-        ScdReplay.Statement(fire(where), Nil, delete = true)
+        new ScdReplay.Statement(delete = true, key = step)((fire(where), Nil))
     }
   }
 }

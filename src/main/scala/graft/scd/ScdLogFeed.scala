@@ -90,14 +90,14 @@ object ScdLogFeed {
     * zero-shuffle replay node over [[ScdReader.loadBase]]'s scan. */
   def asOfSeq(spark: SparkSession, dir: String, n: Long,
       format: String = "parquet"): DataFrame =
-    applyLogSeq(spark, ScdReader.loadBase(spark, dir, format), dir, n)
+    applyLogSeq(ScdReader.open(spark, dir, format), n)
 
-  /** [[asOfSeq]] over an already-loaded base (the `VERSION AS OF` view's
-    * base carries the table's reader schema and options). */
-  private[graft] def applyLogSeq(spark: SparkSession, base: DataFrame,
-      dir: String, n: Long): DataFrame =
-    ScdCompiler(base, toStatements(
-      entries(spark, dir).take(math.min(n, Int.MaxValue.toLong).toInt)))
+  /** [[asOfSeq]] over one read of the table (the `VERSION AS OF` view's
+    * read carries the table's reader schema and options). */
+  private[graft] def applyLogSeq(t: ScdTableState.Read, n: Long): DataFrame =
+    t.replay(toStatements(t.sidecars.collectFirst { case (Nil, text) => text }
+      .fold(Seq.empty[Entry])(parseEntries)
+      .take(math.min(n, Int.MaxValue.toLong).toInt)).map((_, Nil)))
 
   /** CDC rows for the statement range `(fromSeq, toSeq]`: the
     * before/after diff of the seq-replay views, classified

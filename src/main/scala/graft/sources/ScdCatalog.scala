@@ -41,7 +41,19 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * one base loader, the one replay fold) and the loaded [[ScdTable]]
   * carries it: with [[graft.GraftExtensions]] installed the analyzer
   * rewrite substitutes that build (full pushdown); without it the
-  * V1Scan fallback serves, correct either way. */
+  * V1Scan fallback serves, correct either way.
+  *
+  * The build goes through the session's table state for the directory
+  * ([[graft.scd.ScdTableState]]): the analyzed base relation, a
+  * fingerprint of the data files (path, size, mtime), the SQL conf and
+  * the resolved statements. A load with a warm state lists the
+  * directory, reads its sidecars and resolves only new statements: no
+  * schema-inference job, no data file opened. A changed data file or
+  * SQL conf (other than the `scd.time` keys) rebuilds it. At most
+  * [[graft.scd.ScdTableState.MaxTables]] states are kept, none serves
+  * another or a stopped session, and a data file rewritten with the
+  * same name, size and mtime keeps what the relation fixed at build,
+  * such as an inferred schema. */
 class ScdCatalog extends TableCatalog with ProcedureCatalog {
 
   /** Maintenance procedures, SQL-callable (`CALL graft.compact(...)`,

@@ -158,15 +158,17 @@ object ScdDataSource {
       logFeed)
   }
 
-  /** The as-of view behind every path of this source: the
-    * [[ScdReader.loadBase]] base replayed by time ([[ScdReader.read]])
-    * or by statement seq ([[graft.scd.ScdLogFeed.asOfSeq]]). */
+  /** The as-of view behind every path of this source: one read of the
+    * table through its session state ([[ScdReader.open]], the base
+    * [[ScdReader.loadBase]] returns), replayed by time
+    * ([[ScdReader.read]]) or by statement seq
+    * ([[graft.scd.ScdLogFeed.asOfSeq]]). */
   def view(spark: SparkSession, p: ScdParams,
       schema: Option[StructType]): DataFrame = {
-    val base = ScdReader.loadBase(spark, p.path, p.format, schema, p.extra)
+    val t = ScdReader.open(spark, p.path, p.format, schema, p.extra)
     p.asOfSeq match {
-      case Some(n) => graft.scd.ScdLogFeed.applyLogSeq(spark, base, p.path, n)
-      case None => ScdReader.applyLogFile(spark, base, p.path, p.asOf)
+      case Some(n) => graft.scd.ScdLogFeed.applyLogSeq(t, n)
+      case None => t.replay(ScdReader.retained(spark, t.sidecars, p.asOf))
     }
   }
 }

@@ -2,11 +2,12 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, MultiInstanceRelation, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -67,9 +68,53 @@ case class ScdReplay(
 object ScdReplay {
 
   /** One statement before resolution, as [[graft.scd.ScdCompiler]]
-    * compiles it: SET targets are exact column names of the input. */
-  final case class Statement(fire: Column, sets: Seq[(String, Column)],
-      delete: Boolean)
+    * compiles it: its fire predicate and its SETs, whose targets are
+    * exact column names of the input. `key` names the statement to a
+    * [[Memo]]; the columns are built only for a statement the memo
+    * lacks (each `Column` captures its call site, which costs more
+    * than rebinding a held resolution). */
+  final class Statement(val delete: Boolean, val key: Any)(
+      compile: => (Column, Seq[(String, Column)])) {
+    lazy val (fire, sets) = compile
+  }
+
+  /** A statement resolved over a relation's output: its fire predicate
+    * and its SETs, target attribute to value. */
+  final case class Resolved(pred: Expression,
+      sets: Seq[(Attribute, Expression)]) {
+    def rebind(m: AttributeMap[Attribute]): Resolved = {
+      def re(e: Expression) = e.transform { case a: Attribute if m.contains(a) => m(a) }
+      Resolved(re(pred), sets.map { case (t, v) => (m(t), re(v)) })
+    }
+  }
+
+  /** Statement resolutions kept across plans over instances of one
+    * relation, by statement key. Each is held over `over`, the output
+    * of the instance it was resolved on, and rebound by position onto
+    * the output of the instance being planned. At most [[MaxStatements]]
+    * are held; a resolution that would pass that bound first clears the
+    * memo. */
+  final class Memo(over: Seq[Attribute]) {
+    private val held = new java.util.concurrent.ConcurrentHashMap[Any, Resolved]
+
+    /** The held resolution of each key, rebound onto `out`. */
+    def get(keys: Seq[Any], out: Seq[Attribute]): Seq[Option[Resolved]] = {
+      val m = AttributeMap(over.zip(out))
+      keys.map(k => Option(held.get(k)).map(_.rebind(m)))
+    }
+
+    /** Hold `rs`, resolved over `out`. */
+    def put(rs: Seq[(Any, Resolved)], out: Seq[Attribute]): Unit = {
+      val m = AttributeMap(out.zip(over))
+      rs.foreach { case (k, r) =>
+        if (held.size >= MaxStatements) held.clear()
+        held.put(k, r.rebind(m))
+      }
+    }
+  }
+
+  /** The most resolutions one [[Memo]] holds: the default replay cap. */
+  val MaxStatements = 10000
 
   /** Name of the dry run's per-row column of fired statement indices. */
   val FiredColumn = "__scd_fired"
@@ -82,39 +127,59 @@ object ScdReplay {
       (if (fired.nonEmpty) ", dry run" else "")
   }
 
+  /** A DataFrame over a fresh instance of `plan`, an analyzed base
+    * relation kept across reads: every relation leaf and every alias in
+    * it gets new attribute ids, so two reads of one table are two
+    * relations to a join or a self-join check (the ids a new
+    * `spark.read` would give). */
+  def instance(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    val fresh = plan.transformUpWithNewOutput {
+      case r: LeafNode with MultiInstanceRelation =>
+        val n = r.newInstance()
+        (n, r.output.zip(n.output))
+      case p: Project if p.projectList.exists(_.isInstanceOf[Alias]) =>
+        val list = p.projectList.map {
+          case a: Alias => a.newInstance()
+          case e => e
+        }
+        (p.copy(projectList = list), p.output.zip(list.map(_.toAttribute))
+          .filter { case (a, b) => a.exprId != b.exprId })
+    }
+    // the Dataset that first analyzed `plan` tagged it with its id; the
+    // tag belongs to that Dataset, not to this instance
+    fresh.foreach(_.unsetTagValue(org.apache.spark.sql.classic.Dataset.DATASET_ID_TAG))
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], fresh)
+  }
+
   /** Replay `stmts` over `df` as one [[ScdReplay]] node. Every
-    * statement's expressions resolve in ONE analyzer pass over `df`
-    * (one projection of all of them): each SET casts back to its
+    * statement `memo` does not hold resolves in ONE analyzer pass over
+    * `df` (one projection of all of them): each SET casts back to its
     * column's type, so every statement sees the same schema. Analysis
-    * errors surface here, at read time, as they did for a chain. */
+    * errors surface here, at read time, as they did for a chain. Of the
+    * new resolutions, the memo keeps those that cannot change while
+    * the session's conf and the relation stay the same: see
+    * [[reusable]]. */
   def plan(df: DataFrame, stmts: Seq[Statement], skipErrors: Boolean,
-      dryRun: Boolean): DataFrame = {
+      dryRun: Boolean, memo: Option[Memo] = None): DataFrame = {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     register(session)
-    val cols = stmts.zipWithIndex.flatMap { case (s, i) =>
-      s.fire.as(s"p$i") +: s.sets.zipWithIndex.map { case ((_, v), k) =>
-        v.as(s"v${i}_$k")
-      }
-    }
-    val (resolved, child) = df.select(cols: _*).queryExecution.analyzed match {
-      case Project(list, c) if list.size == cols.size =>
-        (list.map { case Alias(e, _) => e; case e => e }, c)
-      case other => throw new IllegalStateException(
-        "SCD statements must be per-row expressions; resolved to:\n" + other)
-    }
+    val child = df.queryExecution.analyzed
+    val held = memo.fold(stmts.map(_ => Option.empty[Resolved]))(
+      _.get(stmts.map(_.key), child.output))
+    val todo = stmts.zip(held).collect { case (s, None) => s }
+    val resolved = resolve(df, child, todo)
+    memo.foreach(_.put(todo.zip(resolved).collect {
+      case (s, r) if reusable(session, s, r) => s.key -> r
+    }, child.output))
     val it = resolved.iterator
-    val steps = stmts.map { s =>
-      val p = it.next()
-      p -> s.sets.map { case (name, _) =>
-        child.output.find(_.name == name).get -> it.next()
-      }
-    }
+    val steps = held.map(_.getOrElse(it.next()))
     // a SET that may write NULL into a column never NULL on input: the
     // column enters the node as a new nullable attribute, or the row
     // writer and the optimizer (`x IS NULL` => false) would trust the
     // input's NOT NULL (an outer join's `withNullability` would not do:
     // the node's own expressions are re-typed from its child's output)
-    val widened = AttributeMap(steps.flatMap(_._2).collect {
+    val widened = AttributeMap(steps.flatMap(_.sets).collect {
       case (t, v) if v.nullable && !t.nullable => t
     }.distinct.map(t => t ->
       Alias(KnownNullable(t), t.name)(explicitMetadata = Some(t.metadata))))
@@ -125,7 +190,7 @@ object ScdReplay {
     // Below the node it sees the row before any statement, so one that
     // reads a column an earlier statement SETs is refused.
     var written = AttributeSet.empty
-    val nondet = steps.flatMap { case (p, sets) =>
+    val nondet = steps.flatMap { case Resolved(p, sets) =>
       val found = (p +: sets.map(_._2)).flatMap(_.collect {
         case n: Nondeterministic => n: Expression
         case u: UserDefinedExpression if !u.deterministic => u: Expression
@@ -151,12 +216,60 @@ object ScdReplay {
     val below =
       if (widened.isEmpty && nondet.isEmpty) child
       else Project(columns ++ nondet.map(_._2), child)
-    val node = ScdReplay(steps.map(s => in(s._1)),
-      steps.map(_._2.map(s => in(s._1).asInstanceOf[Attribute])),
-      steps.map(_._2.map(s => in(s._2))), stmts.map(_.delete), fired,
+    val node = ScdReplay(steps.map(s => in(s.pred)),
+      steps.map(_.sets.map(s => in(s._1).asInstanceOf[Attribute])),
+      steps.map(_.sets.map(s => in(s._2))), stmts.map(_.delete), fired,
       skipErrors, below)
     org.apache.spark.sql.classic.Dataset.ofRows(session,
       if (nondet.isEmpty) node else Project(columns.map(_.toAttribute) ++ fired, node))
+  }
+
+  /** `stmts` resolved over `child`, `df`'s analyzed plan, in one
+    * analyzer pass. */
+  private def resolve(df: DataFrame, child: LogicalPlan,
+      stmts: Seq[Statement]): Seq[Resolved] =
+    if (stmts.isEmpty) Nil
+    else {
+      val cols = stmts.zipWithIndex.flatMap { case (s, i) =>
+        s.fire.as(s"p$i") +: s.sets.zipWithIndex.map { case ((_, v), k) =>
+          v.as(s"v${i}_$k")
+        }
+      }
+      val list = df.select(cols: _*).queryExecution.analyzed match {
+        case Project(list, c) if list.size == cols.size && c.output == child.output =>
+          list.map { case Alias(e, _) => e; case e => e }
+        case other => throw new IllegalStateException(
+          "SCD statements must be per-row expressions; resolved to:\n" + other)
+      }
+      val it = list.iterator
+      stmts.map { s =>
+        Resolved(it.next(), s.sets.map { case (name, _) =>
+          child.output.find(_.name == name).get -> it.next()
+        })
+      }
+    }
+
+  /** Whether a resolution stays right while the session's SQL conf and
+    * the relation stay the same (a [[Memo]] is dropped with either): it
+    * calls only built-in functions the session has not re-registered,
+    * and holds no UDF, subquery, session variable or nondeterministic
+    * expression (a seed or a variable's value is fixed at analysis). */
+  private def reusable(spark: org.apache.spark.sql.classic.SparkSession,
+      s: Statement, r: Resolved): Boolean = {
+    val registry = spark.sessionState.functionRegistry
+    def builtin(parts: Seq[String]) = parts.length == 1 && {
+      val id = FunctionIdentifier(parts.head)
+      FunctionRegistry.builtin.lookupFunctionBuilder(id)
+        .exists(b => registry.lookupFunctionBuilder(id).exists(_ eq b))
+    }
+    (r.pred +: r.sets.map(_._2)).forall(e => e.deterministic &&
+      !SubqueryExpression.hasSubquery(e) && !e.exists {
+        case _: UserDefinedExpression | _: VariableReference => true
+        case _ => false
+      }) &&
+      (s.fire +: s.sets.map(_._2)).forall(c => spark.expression(c).collect {
+        case f: UnresolvedFunction => f.nameParts
+      }.forall(builtin))
   }
 
   /** Plan [[ScdReplay]] on `spark` (strategy + pushdown rule), once per

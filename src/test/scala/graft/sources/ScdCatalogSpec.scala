@@ -423,16 +423,26 @@ class ScdCatalogSpec extends SparkSpec {
   }
 }
 
-/** Local filesystem that counts opens of `.updates` sidecars. */
+/** Local filesystem that counts opens of `.updates` sidecars, opens of
+  * data files (names not starting with '.' or '_') and `exists` calls. */
 class SidecarOpenCountingFs extends org.apache.hadoop.fs.LocalFileSystem {
   override def open(f: org.apache.hadoop.fs.Path,
       bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
     if (f.getName == ScdReader.SidecarName)
       SidecarOpenCountingFs.opens.incrementAndGet()
+    else if (!f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      SidecarOpenCountingFs.dataOpens.incrementAndGet()
     super.open(f, bufferSize)
+  }
+
+  override def exists(f: org.apache.hadoop.fs.Path): Boolean = {
+    SidecarOpenCountingFs.existsCalls.incrementAndGet()
+    super.exists(f)
   }
 }
 
 object SidecarOpenCountingFs {
   val opens = new java.util.concurrent.atomic.AtomicInteger
+  val dataOpens = new java.util.concurrent.atomic.AtomicInteger
+  val existsCalls = new java.util.concurrent.atomic.AtomicInteger
 }
