@@ -66,80 +66,40 @@ object SparkEntry {
       |    CASE WHEN doc_id % 9 = 4 THEN ' trace 99204111111111111111880'
       |         ELSE '' END""".stripMargin
 
-  /** Per-(application, data-dir) memo of the ON-DISK corpus minhash
-    * signature index PATH — the persisted parquet artifact the
-    * dedup_incremental_indexed pipeline reloads each night (its build
-    * cost is amortized across runs by design, so repeated invocations
-    * of the query probe the SAME persisted index). The artifact lives
-    * under target/graft-index and, being plain parquet, carries no
-    * block-manager state — a fresh session can serve from it
-    * (PqIndexSpec proves the PQ twin). Keying on the application id
-    * forces a per-application rebuild, which keeps a stale artifact
-    * from one driver-testdata generation from being served against the
-    * next. Like any persisted index, the artifact is STALE BY DESIGN
-    * if the underlying files are rewritten without rebuilding — that
-    * is the production contract, not a cache bug (dedup_incremental,
-    * which re-derives inline, would then legitimately disagree). */
-  private val sigIndexCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+  /** Per-(kind, application, data-dir) memo of ON-DISK artifact PATHS:
+    * the persisted indexes and layouts (minhash signatures, PQ/SQ8/IVF
+    * codes, BM25 tf, BPE and unigram tables, Jaccard and
+    * decontamination indexes, PageRank warm state, the Z-ordered
+    * lineitem copy with its manifests) whose build is amortized across
+    * runs by design, so repeated invocations of a query probe the SAME
+    * persisted artifact and charge only the serving path. The artifacts
+    * live under target/graft-index and, being plain parquet, carry no
+    * block-manager state — a fresh session can serve from them
+    * (PqIndexSpec proves it). Keying on the application id forces a
+    * per-application rebuild, which keeps a stale artifact from one
+    * driver-testdata generation from being served against the next.
+    * Like any persisted index, an artifact is STALE BY DESIGN if the
+    * underlying files are rewritten without rebuilding — that is the
+    * production contract, not a cache bug (the inline twins, which
+    * re-derive, would then legitimately disagree). */
+  private val artifacts =
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), String]
 
-  /** Per-(application, data-dir) memo of the ON-DISK PQ index PATH —
-    * codebook + encoded corpus parquet for sim_pq_indexed: at 100 TB
-    * the corpus encode is a one-time WRITE (m bytes/vector), not a
-    * per-query-batch cost, so the declared query must charge each run
-    * only the distance-table build + the compressed-domain scan.
-    * Same contract and staleness semantics as [[sigIndexCache]]. */
-  private val pqIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
-  /** Per-(application, data-dir) memo of the ON-DISK BM25 tf-index
-    * PATH for text_bm25_indexed — the retrieval twin of
-    * [[pqIndexCache]]: at corpus scale the tokenize + tf groupBy is a
-    * one-time build, so the serving query charges only the
-    * broadcast-pruned posting join against the parquet artifact. Same
-    * contract and staleness semantics as [[sigIndexCache]]. */
-  private val tfIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
-  /** Per-(application, data-dir) memo of the ON-DISK BPE merge-table
-    * PATH (text_bpe_indexed) — the tokenizer artifact of the
-    * build-once/serve-cheap family. Same contract and staleness
-    * semantics as [[sigIndexCache]]. */
-  private val bpeIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-  private val uniIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
-  /** Per-(application, data-dir) memo of the ON-DISK exact-Jaccard
-    * index PATH (Dedup.jaccardIndexWrite: DF-ordered arrays + df
-    * table) for dedup_jaccard_indexed / dedup_jaccard_incremental.
-    * Same contract and staleness semantics as [[sigIndexCache]]. */
-  private val jacIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
-  /** Per-(application, data-dir) memo of the ON-DISK PageRank warm
-    * artifact PATH (Graph.pageRankIndexWrite: adjacency index + exact
-    * 2-round micro-unit state) for q_graph_pagerank_warm. Same
-    * contract and staleness semantics as [[sigIndexCache]]. */
-  private val grIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
-  /** Per-(application, data-dir) memo of the ON-DISK SQ8 index PATH
-    * (Similarity.sqIndexWrite: per-dim grid + byte-coded corpus) for
-    * sim_sq8_indexed. Same contract and staleness semantics as
-    * [[sigIndexCache]]. */
-  private val sqIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
-
-  /** Per-(application, data-dir) memo of the Z-ORDERED LINEITEM COPY +
-    * its zone-map and bloom manifests (q_zonemap_scan /
-    * q_bloomskip_point): at 100 TB clustering + manifest build is the
-    * one-time layout job; the declared queries charge each run only
-    * the manifest probe + the scan of the files the manifest could not
-    * rule out. Same contract and staleness semantics as
-    * [[sigIndexCache]]. */
-  private val zlFixtureCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
+  /** The `kind` artifact of `dir` for this application: its directory
+    * ([[indexPath]]), filled by `build` on first use. Other
+    * applications' entries are dropped, and their `kind` directories
+    * reclaimed ([[evictDeadAppDirs]]). */
+  private def artifact(kind: String, s: SparkSession, dir: String)(
+      build: String => Unit): String = {
+    val appId = s.sparkContext.applicationId
+    artifacts.filterInPlace((k, _) => k._2 == appId)
+    evictDeadAppDirs(kind, appId)
+    artifacts.getOrElseUpdate((kind, appId, dir), {
+      val p = indexPath(kind, appId, dir)
+      build(p)
+      p
+    })
+  }
 
   /** Stable filesystem-safe artifact directory for a (kind, data-dir)
     * pair, per application. */
@@ -152,11 +112,8 @@ object SparkEntry {
     * bloom manifest on the UNCLUSTERED l_orderkey — the two manifest
     * kinds cover the two probe shapes (range on clustered, point on
     * anything). */
-  private def zlFixture(s: SparkSession, dir: String): String = {
-    val appId = s.sparkContext.applicationId
-    evictDeadApps(zlFixtureCache, "zl", appId)
-    zlFixtureCache.getOrElseUpdate((appId, dir), {
-      val p = indexPath("zl", appId, dir)
+  private def zlFixture(s: SparkSession, dir: String): String =
+    artifact("zl", s, dir) { p =>
       val li = t(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_partkey"), col("l_suppkey"), col("l_quantity"))
       Layout.zOrderedWrite(li, Seq(col("l_partkey"), col("l_suppkey")),
@@ -165,25 +122,15 @@ object SparkEntry {
         s"$p/zm")
       Layout.bloomManifestWrite(s, s"$p/data", "l_orderkey",
         expectedItemsPerFile = 65536, s"$p/bloom")
-      p
-    })
-  }
+    }
 
-  /** Evict other applications' `kind` entries from `cache` AND their
-    * on-disk artifact directories (ADVICE r7: filterInPlace alone let
-    * target/graft-index grow one dir set per bench/test run, unbounded
-    * across rounds). A dead app's dir is only reclaimed once its mtime
-    * is > 2 h old — a CONCURRENT sibling JVM (sbt test beside a bench
-    * run) is minutes old and must not lose its live artifact. */
-  private def evictDeadApps(
-      cache: scala.collection.concurrent.TrieMap[(String, String), String],
-      kind: String, appId: String): Unit = {
-    cache.filterInPlace((k, _) => k._1 == appId)
-    evictDeadAppDirs(kind, appId)
-  }
-
-  /** The on-disk half of [[evictDeadApps]], for artifact kinds that are
-    * rewritten on every call and so have no memo. */
+  /** Reclaim other applications' `kind` artifact directories (ADVICE
+    * r7: dropping memo entries alone let target/graft-index grow one dir
+    * set per bench/test run, unbounded across rounds). A dead app's dir
+    * is only reclaimed once its mtime is > 2 h old — a CONCURRENT
+    * sibling JVM (sbt test beside a bench run) is minutes old and must
+    * not lose its live artifact. Kinds rewritten on every call, which
+    * have no memo, call this directly. */
   private def evictDeadAppDirs(kind: String, appId: String): Unit = {
     val root = new java.io.File("target/graft-index")
     val live = s"$kind-$appId-"
@@ -870,10 +817,7 @@ object SparkEntry {
     // nightly-growth story: O(batch) per day, quantile reads touch
     // ≤ ~1 920 rows.
     "q_hdr_incremental" -> ((s, dir) => {
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(tfIndexCache, "hdr", appId)
-      val path = tfIndexCache.getOrElseUpdate((appId, s"hdr:$dir"), {
-        val p = indexPath("hdr", appId, dir)
+      val path = artifact("hdr", s, dir) { p =>
         val docs = t(s, dir, "documents")
           .select(col("n_chars").as("x"), col("doc_id"))
           .where(col("x") >= 0)
@@ -881,8 +825,7 @@ object SparkEntry {
           "x", 5, p)
         Sketch.hdrIndexAppend(docs.where(col("doc_id") % 5 === 0),
           "x", 5, p)
-        p
-      })
+      }
       val served = Sketch.hdrIndexRead(s, path)
       val rebuilt = Sketch.hdrSketch(
         t(s, dir, "documents").select(col("n_chars").as("x"))
@@ -1529,13 +1472,9 @@ object SparkEntry {
     // BIT-IDENTICAL to cold(3) — the oracle replays the full 3-round
     // unroll, so any resume drift fails the hash
     "q_graph_pagerank_warm" -> ((s, dir) => {
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(grIndexCache, "gr", appId)
-      val path = grIndexCache.getOrElseUpdate((appId, dir), {
-        val p = indexPath("gr", appId, dir)
+      val path = artifact("gr", s, dir) { p =>
         Graph.pageRankIndexWrite(graphEdges(s, dir), p, iters = 2)
-        p
-      })
+      }
       Graph.pageRankResume(s, path, iters = 1).orderBy("node")
     }),
 
@@ -2475,13 +2414,9 @@ object SparkEntry {
     // (id, t, tf) and never re-tokenizes raw text
     "text_bm25_indexed" -> ((s, dir) => {
       import s.implicits._
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(tfIndexCache, "tf", appId)
-      val path = tfIndexCache.getOrElseUpdate((appId, dir), {
-        val p = indexPath("tf", appId, dir)
+      val path = artifact("tf", s, dir) { p =>
         Retrieval.tfIndexWrite(t(s, dir, "documents"), p)
-        p
-      })
+      }
       val q = Seq((1L, "hash join merge"), (2L, "slow query scan"),
         (3L, "stream window agg")).toDF("query_id", "qtext")
       Retrieval.bm25TopKWith(Retrieval.tfIndexRead(s, path), q)
@@ -2497,14 +2432,10 @@ object SparkEntry {
     "text_bm25_appended" -> ((s, dir) => {
       import s.implicits._
       val docs = t(s, dir, "documents")
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(tfIndexCache, "tfa", appId)
-      val path = tfIndexCache.getOrElseUpdate((appId, s"append:$dir"), {
-        val p = indexPath("tfa", appId, dir)
+      val path = artifact("tfa", s, dir) { p =>
         Retrieval.tfIndexWrite(docs.where(col("doc_id") % 3 =!= 0), p)
         Retrieval.tfIndexAppend(docs.where(col("doc_id") % 3 === 0), p)
-        p
-      })
+      }
       val q = Seq((1L, "hash join merge"), (2L, "slow query scan"),
         (3L, "stream window agg")).toDF("query_id", "qtext")
       Retrieval.bm25TopKWith(Retrieval.tfIndexRead(s, path), q)
@@ -2616,13 +2547,9 @@ object SparkEntry {
     // table); output pinned identical to text_bpe_encode's
     // train-inline path by the shared oracle
     "text_bpe_indexed" -> ((s, dir) => {
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(bpeIndexCache, "bpe", appId)
-      val path = bpeIndexCache.getOrElseUpdate((appId, dir), {
-        val p = indexPath("bpe", appId, dir)
+      val path = artifact("bpe", s, dir) { p =>
         TextAnalysis.bpeIndexWrite(t(s, dir, "documents"), merges = 3, p)
-        p
-      })
+      }
       TextAnalysis.bpeEncodeWith(t(s, dir, "documents"), path)
         .orderBy("doc_id")
     }),
@@ -2686,14 +2613,10 @@ object SparkEntry {
     // artifact shape): per-word Viterbi as a plan-constant per-row
     // codegen'd expression — no join, no shuffle in the corpus scan
     "text_unigram_encode" -> ((s, dir) => {
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(uniIndexCache, "uni", appId)
-      val path = uniIndexCache.getOrElseUpdate((appId, dir), {
-        val p = indexPath("uni", appId, dir)
+      val path = artifact("uni", s, dir) { p =>
         UnigramTokenizer.unigramIndexWrite(t(s, dir, "documents"),
           vocabSize = 40, iters = 1, path = p, maxWordLen = 12)
-        p
-      })
+      }
       UnigramTokenizer.unigramEncodeWith(t(s, dir, "documents"), path,
           maxWordLen = 12)
         .orderBy("doc_id")
@@ -3119,13 +3042,9 @@ object SparkEntry {
     // (one nightly build, two joins): no re-shingle, no df groupBy,
     // no per-doc sorts — pair-identical, same oracle
     "dedup_containment_indexed" -> ((s, dir) => {
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(jacIndexCache, "jac", appId)
-      val path = jacIndexCache.getOrElseUpdate((appId, dir), {
-        val p = indexPath("jac", appId, dir)
+      val path = artifact("jac", s, dir) { p =>
         Dedup.jaccardIndexWrite(t(s, dir, "documents"), p)
-        p
-      })
+      }
       Dedup.containmentJoinIndexed(s, path, threshold = 0.8)
         .select(col("id_a"), col("id_b"), col("n_common"), col("n_a"),
           col("n_b"), round(col("containment"), 4).as("containment"))
@@ -3161,13 +3080,9 @@ object SparkEntry {
     // run — output ≡ inline, same oracle
     "q_decontaminate_near_indexed" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(jacIndexCache, "jac4", appId)
-      val path = jacIndexCache.getOrElseUpdate((appId, s"jac4:$dir"), {
-        val p = indexPath("jac4", appId, dir)
+      val path = artifact("jac4", s, dir) { p =>
         Dedup.jaccardIndexWrite(docs, p, w = 4)
-        p
-      })
+      }
       Dedup.decontaminateNearIndexed(
           docs.where(col("doc_id") % 37 === 0), path, w = 4,
           threshold = 0.5)
@@ -3193,13 +3108,9 @@ object SparkEntry {
     // assignment): output ≡ inline, same oracle
     "q_decontaminate_sem_indexed" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(jacIndexCache, "sem", appId)
-      val path = jacIndexCache.getOrElseUpdate((appId, s"sem:$dir"), {
-        val p = indexPath("sem", appId, dir)
+      val path = artifact("sem", s, dir) { p =>
         Similarity.ivfIndexWrite(e, p, k = 8, iters = 2)
-        p
-      })
+      }
       Dedup.decontaminateSemanticIndexed(
           e.where(col("vec_id") % 37 === 0), path, nProbe = 2,
           threshold = 0.4)
@@ -3212,14 +3123,10 @@ object SparkEntry {
     // scrubbed against) — output ≡ inline, same oracle
     "q_decontaminate_indexed" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(jacIndexCache, "dec", appId)
-      val path = jacIndexCache.getOrElseUpdate((appId, s"dec:$dir"), {
-        val p = indexPath("dec", appId, dir)
+      val path = artifact("dec", s, dir) { p =>
         Dedup.decontaminationIndexWrite(
           docs.where(col("doc_id") % 37 === 0), p)
-        p
-      })
+      }
       Dedup.decontaminateIndexed(docs, path).orderBy("doc_id")
     }),
 
@@ -3231,26 +3138,16 @@ object SparkEntry {
     "q_decontaminate_ladder" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val embs = t(s, dir, "embeddings")
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(jacIndexCache, "dec", appId)
-      val decPath = jacIndexCache.getOrElseUpdate((appId, s"dec:$dir"), {
-        val p = indexPath("dec", appId, dir)
+      val decPath = artifact("dec", s, dir) { p =>
         Dedup.decontaminationIndexWrite(
           docs.where(col("doc_id") % 37 === 0), p)
-        p
-      })
-      evictDeadApps(jacIndexCache, "jac4", appId)
-      val jacPath = jacIndexCache.getOrElseUpdate((appId, s"jac4:$dir"), {
-        val p = indexPath("jac4", appId, dir)
+      }
+      val jacPath = artifact("jac4", s, dir) { p =>
         Dedup.jaccardIndexWrite(docs, p, w = 4)
-        p
-      })
-      evictDeadApps(jacIndexCache, "sem", appId)
-      val semPath = jacIndexCache.getOrElseUpdate((appId, s"sem:$dir"), {
-        val p = indexPath("sem", appId, dir)
+      }
+      val semPath = artifact("sem", s, dir) { p =>
         Similarity.ivfIndexWrite(embs, p, k = 8, iters = 2)
-        p
-      })
+      }
       val bench = docs.where(col("doc_id") % 37 === 0)
       val verb = Dedup.decontaminateIndexed(docs, decPath)
         .select(col("doc_id"), col("contaminated").as("verbatim"))
@@ -3283,13 +3180,9 @@ object SparkEntry {
     // across the boundary; corpus-vs-corpus never recomputed
     "dedup_containment_incremental" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(jacIndexCache, "jace", appId)
-      val path = jacIndexCache.getOrElseUpdate((appId, s"even:$dir"), {
-        val p = indexPath("jace", appId, dir)
+      val path = artifact("jace", s, dir) { p =>
         Dedup.jaccardIndexWrite(docs.where(col("doc_id") % 2 === 0), p)
-        p
-      })
+      }
       Dedup.containmentJoinIncremental(
           docs.where(col("doc_id") % 2 === 1), path, threshold = 0.8)
         .select(col("id_a"), col("id_b"), col("n_common"), col("n_a"),
@@ -3305,13 +3198,9 @@ object SparkEntry {
     // groupBy, no per-doc sorts. Output ≡ dedup_jaccard_join, pair
     // for pair (same oracle).
     "dedup_jaccard_indexed" -> ((s, dir) => {
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(jacIndexCache, "jac", appId)
-      val path = jacIndexCache.getOrElseUpdate((appId, dir), {
-        val p = indexPath("jac", appId, dir)
+      val path = artifact("jac", s, dir) { p =>
         Dedup.jaccardIndexWrite(t(s, dir, "documents"), p)
-        p
-      })
+      }
       Dedup.jaccardJoinIndexed(s, path, threshold = 0.8)
         .select(col("id_a"), col("id_b"), col("n_common"), col("n_a"),
           col("n_b"), round(col("jaccard"), 4).as("jaccard"))
@@ -3325,13 +3214,9 @@ object SparkEntry {
     // cost is O(batch shingles) + the rare-shingle candidate join
     "dedup_jaccard_incremental" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(jacIndexCache, "jace", appId)
-      val path = jacIndexCache.getOrElseUpdate((appId, s"even:$dir"), {
-        val p = indexPath("jace", appId, dir)
+      val path = artifact("jace", s, dir) { p =>
         Dedup.jaccardIndexWrite(docs.where(col("doc_id") % 2 === 0), p)
-        p
-      })
+      }
       Dedup.jaccardJoinIncremental(docs.where(col("doc_id") % 2 === 1),
         path, threshold = 0.8)
         .select(col("id_a"), col("id_b"), col("n_common"), col("n_a"),
@@ -3368,15 +3253,9 @@ object SparkEntry {
     "dedup_incremental_indexed" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.where(col("doc_id") % 2 === 0)
-      // evict entries from dead applications so session-cycling JVMs
-      // (test harnesses, notebooks) don't pin dead paths forever
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(sigIndexCache, "sig", appId)
-      val path = sigIndexCache.getOrElseUpdate((appId, dir), {
-        val p = indexPath("sig", appId, dir)
+      val path = artifact("sig", s, dir) { p =>
         Dedup.signatureIndexWrite(corpus, p)
-        p
-      })
+      }
       val index = Dedup.signatureIndexRead(s, path)
       Dedup.minhashLshPairsIncremental(
         corpus, docs.where(col("doc_id") % 2 === 1), threshold = 0.8,
@@ -3395,14 +3274,10 @@ object SparkEntry {
     "dedup_incremental_appended" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val corpus = docs.where(col("doc_id") % 2 === 0)
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(sigIndexCache, "siga", appId)
-      val path = sigIndexCache.getOrElseUpdate((appId, s"append:$dir"), {
-        val p = indexPath("siga", appId, dir)
+      val path = artifact("siga", s, dir) { p =>
         Dedup.signatureIndexWrite(docs.where(col("doc_id") % 4 === 0), p)
         Dedup.signatureIndexAppend(docs.where(col("doc_id") % 4 === 2), p)
-        p
-      })
+      }
       val index = Dedup.signatureIndexRead(s, path)
       Dedup.minhashLshPairsIncremental(
         corpus, docs.where(col("doc_id") % 2 === 1), threshold = 0.8,
@@ -3640,13 +3515,9 @@ object SparkEntry {
     // same oracle pins the artifact path
     "sim_sq8_indexed" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(sqIndexCache, "sq", appId)
-      val path = sqIndexCache.getOrElseUpdate((appId, dir), {
-        val p = indexPath("sq", appId, dir)
+      val path = artifact("sq", s, dir) { p =>
         Similarity.sqIndexWrite(e, p)
-        p
-      })
+      }
       val (grid, encoded) = Similarity.sqIndexRead(s, path)
       Similarity.sqTopKWith(encoded, grid, e.where(col("vec_id") < 10),
         5).orderBy("query_id", "rank")
@@ -3686,13 +3557,9 @@ object SparkEntry {
     "sim_pq_indexed" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val n = Similarity.l2Normalize(e)
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(pqIndexCache, "pq", appId)
-      val path = pqIndexCache.getOrElseUpdate((appId, dir), {
-        val p = indexPath("pq", appId, dir)
+      val path = artifact("pq", s, dir) { p =>
         Similarity.pqIndexWrite(n, p)
-        p
-      })
+      }
       val (books, encoded) = Similarity.pqIndexRead(s, path)
       val dts = Similarity.pqDistanceTables(n.where(col("vec_id") < 10),
         books)
@@ -3710,14 +3577,10 @@ object SparkEntry {
       val n = Similarity.l2Normalize(t(s, dir, "embeddings"))
       val initial = n.where(col("vec_id") % 5 =!= 0)
       val batch = n.where(col("vec_id") % 5 === 0)
-      val appId = s.sparkContext.applicationId
-      evictDeadApps(pqIndexCache, "pqa", appId)
-      val path = pqIndexCache.getOrElseUpdate((appId, s"append:$dir"), {
-        val p = indexPath("pqa", appId, dir)
+      val path = artifact("pqa", s, dir) { p =>
         Similarity.pqIndexWrite(initial, p)
         Similarity.pqIndexAppend(batch, p)
-        p
-      })
+      }
       val (books, encoded) = Similarity.pqIndexRead(s, path)
       val dts = Similarity.pqDistanceTables(n.where(col("vec_id") < 10),
         books)

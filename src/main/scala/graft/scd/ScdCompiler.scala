@@ -65,14 +65,18 @@ object ScdCompiler {
     * stays ONE narrow scan with partition pruning intact. `compat`
     * selects [[compat]]'s error policy. `memo` holds the table's
     * resolved steps when `df` is an instance of its base (see
-    * [[ScdTableState]]); the steps it lacks resolve in one pass. */
+    * [[ScdTableState]]); the steps it lacks resolve in one pass.
+    * `valid` names a struct column (valid_from_ms, valid_to_ms) of `df`
+    * outside the table: a step also fires only where valid_from_ms >=
+    * its time ([[ScdReader.history]]). */
   private[graft] def replay(df: DataFrame, steps: Seq[Step],
       compat: Boolean = false,
-      memo: Option[ScdReplay.Memo] = None): DataFrame = {
+      memo: Option[ScdReplay.Memo] = None,
+      valid: Option[String] = None): DataFrame = {
     guardReplaySize(df, steps.size)
     if (steps.isEmpty) df
-    else ScdReplay.plan(df, steps.map(compile(df, _)), skipErrors = compat,
-      dryRun = false, memo = memo)
+    else ScdReplay.plan(df, steps.map(compile(df, _, valid)),
+      skipErrors = compat, dryRun = false, memo = memo)
   }
 
   /** Reference-compat error policy (O13, SQLUpdater.java:171-174): the
@@ -144,7 +148,7 @@ object ScdCompiler {
       return spark.range(0).select(col("id").as("stmt_idx"),
         lit("").as("verb"), col("id").as("n_matched"))
     guardReplaySize(df, stmts.size)
-    val hits = ScdReplay.plan(df, stmts.map(s => compile(df, (s, Nil))),
+    val hits = ScdReplay.plan(df, stmts.map(s => compile(df, (s, Nil), None)),
       skipErrors = false, dryRun = true)
       .select(explode(col(ScdReplay.FiredColumn)).as("i"), lit(1L).as("n"))
     // every statement once more with weight 0, so one that fires on no
@@ -174,17 +178,20 @@ object ScdCompiler {
     }.reduce(_ && _)
 
   /** One statement as the replay node takes it: the fire predicate
-    * (partition guard ANDed in) and every SET, cast back to its
+    * (guards ANDed in, see [[replay]]) and every SET, cast back to its
     * column's type; the step itself is its memo key. */
-  private def compile(df: DataFrame, step: Step): ScdReplay.Statement = {
+  private def compile(df: DataFrame, step: Step,
+      valid: Option[String]): ScdReplay.Statement = {
     val (stmt, spec) = step
     // three-valued-logic hygiene: a partition guard comparing against
     // a NULL partition value yields NULL, and a NULL guard must mean
     // "not my partition" (else a seg=A log's DELETE would drop the
     // null partition's rows)
-    def fire(where: Option[String]) =
-      if (spec.isEmpty) pred(where)
-      else coalesce(partitionGuard(spec), lit(false)) && pred(where)
+    def guards = valid.map(v => col(v)("valid_from_ms") >= stmt.timeMillis) ++
+      Option.when(spec.nonEmpty)(coalesce(partitionGuard(spec), lit(false)))
+    def fire(where: Option[String]) = (guards.toSeq :+ pred(where)).reduce(_ && _)
+    // built only for a statement the memo lacks, like its columns
+    lazy val fields = df.schema.fields.toSeq.filterNot(f => valid.contains(f.name))
     stmt match {
       case ScdUpdate(_, sets, where, _) =>
         new ScdReplay.Statement(delete = false, key = step)({
@@ -193,12 +200,12 @@ object ScdCompiler {
           // error, SQLUpdater.java:82-89), never silently no-op (ADVICE
           // r01)
           sets.foreach { case (c, _) =>
-            if (!df.schema.fields.exists(_.name.equalsIgnoreCase(c)))
+            if (!fields.exists(_.name.equalsIgnoreCase(c)))
               throw new IllegalStateException(
                 s"UPDATE SET references unknown column '$c' " +
-                  s"(schema: ${df.schema.fieldNames.mkString(", ")})")
+                  s"(schema: ${fields.map(_.name).mkString(", ")})")
           }
-          (fire(where), df.schema.fields.toSeq.flatMap { f =>
+          (fire(where), fields.flatMap { f =>
             sets.collectFirst { case (c, e) if c.equalsIgnoreCase(f.name) =>
               f.name -> expr(e).cast(f.dataType)
             }

@@ -2,7 +2,8 @@ package graft.scd
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{DataFrame, SparkSession, functions}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, explode, struct, transform, typedLit}
 
 import java.nio.charset.StandardCharsets
 
@@ -32,7 +33,7 @@ import java.nio.charset.StandardCharsets
   * removed or resized data file, or any SQL conf change other than the
   * two `scd.time` keys, rebuilds the state. The states are bounded
   * ([[ScdTableState.MaxTables]] tables, each with at most
-  * [[org.apache.spark.sql.graft.ScdReplay.MaxStatements]] resolutions)
+  * [[ScdCompiler.MaxReplayStatementsDefault]] resolutions)
   * and never serve another or a stopped session. Residual case: a data
   * file rewritten with the same name, size and mtime keeps what the
   * relation fixed at build (e.g. an inferred schema), the limit of
@@ -267,15 +268,16 @@ object ScdReader {
     * the natural "Type 7 → SCD2" bridge (reference README.md:239-244
     * pairs the raw log with materialized snapshots the same way).
     *
-    * The union has one branch per DISTINCT statement time — statement
-    * logs are small (driver-parsed), so plan size stays O(#times); each
-    * branch is the usual narrow compiled replay over the same scan. */
+    * ONE replay over ONE scan at any number of times (ICDE 2025 operator
+    * fusion, PAPERS.md): each base row is copied once per interval, and
+    * a statement fires on a copy whose interval starts at or after its
+    * time. Columns: the base's, `valid_from_ms`, `valid_to_ms`. */
   def historyText(
       spark: SparkSession,
       base: DataFrame,
       logText: String): DataFrame =
-    snapshots(UpdatesParser.parse(logText, Long.MaxValue)
-      .statements.map((_, Nil)), ScdCompiler.replay(base, _))
+    snapshots(base, UpdatesParser.parse(logText, Long.MaxValue)
+      .statements.map((_, Nil)))
 
   /** History export for a table directory (see [[historyText]]) —
     * partition-aware: the steps are [[applyLogFile]]'s global-time
@@ -289,25 +291,23 @@ object ScdReader {
       schema: Option[StructType] = None,
       options: Map[String, String] = Map.empty): DataFrame = {
     val t = open(spark, dir, format, schema, options)
-    snapshots(mergedStatements(t.sidecars, Long.MaxValue), t.replay)
+    snapshots(t.base, mergedStatements(t.sidecars, Long.MaxValue))
   }
 
-  /** Per distinct effective time t (epoch first), the replay of the
-    * steps dated <= t, tagged [t, next t). The latest snapshot (every
-    * step) compiles first, so an over-cap log fails before the rest,
-    * and with a table's memo the other snapshots reuse its
-    * resolutions. */
-  private def snapshots(steps: Seq[ScdCompiler.Step],
-      replay: Seq[ScdCompiler.Step] => DataFrame): DataFrame = {
+  /** `base` once per distinct time t of `steps` (epoch first), tagged
+    * [t, next t), with the steps dated <= t replayed on it. No table memo:
+    * these predicates carry the interval guard. */
+  private def snapshots(base: DataFrame,
+      steps: Seq[ScdCompiler.Step]): DataFrame = {
     val times = (0L +: steps.map(_._1.timeMillis)).distinct.sorted
-    times.indices.reverse.map { i =>
-      val validTo =
-        if (i + 1 < times.length) functions.lit(times(i + 1))
-        else functions.lit(null).cast("long")
-      replay(steps.filter(_._1.timeMillis <= times(i)))
-        .withColumn("valid_from_ms", functions.lit(times(i)))
-        .withColumn("valid_to_ms", validTo)
-    }.reverse.reduce(_ unionByName _)
+    val next = typedLit(times.tail.map(Option(_)) :+ None)
+    val valid = "__scd_valid"
+    ScdCompiler.replay(base.withColumn(valid, explode(transform(typedLit(times),
+        (t, i) => struct(t.as("valid_from_ms"), next(i).as("valid_to_ms"))))),
+      steps, valid = Some(valid))
+      .withColumn("valid_from_ms", col(valid)("valid_from_ms"))
+      .withColumn("valid_to_ms", col(valid)("valid_to_ms"))
+      .drop(valid)
   }
 
   /** Register the as-of view under a SQL-queryable name — the analogue

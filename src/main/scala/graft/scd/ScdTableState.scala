@@ -33,7 +33,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * table are two relations to a join.
   *
   * Bounds: at most [[MaxTables]] states in the JVM, the least recently
-  * read dropped first, and at most [[ScdReplay.MaxStatements]]
+  * read dropped first, and at most [[ScdCompiler.MaxReplayStatementsDefault]]
   * resolutions per state. A state serves only the session that built
   * it, and the states of a stopped session are dropped at the next
   * read. Residual case: a data file rewritten under the same name with

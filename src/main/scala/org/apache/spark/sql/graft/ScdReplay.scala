@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import graft.scd.ScdCompiler
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
@@ -7,6 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, MultiInstanceRe
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.optimizer.EliminateSQLFunctionNode
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -91,9 +93,9 @@ object ScdReplay {
   /** Statement resolutions kept across plans over instances of one
     * relation, by statement key. Each is held over `over`, the output
     * of the instance it was resolved on, and rebound by position onto
-    * the output of the instance being planned. At most [[MaxStatements]]
-    * are held; a resolution that would pass that bound first clears the
-    * memo. */
+    * the output of the instance being planned. At most the default
+    * replay cap, [[ScdCompiler.MaxReplayStatementsDefault]], are held; a
+    * resolution that would pass that bound first clears the memo. */
   final class Memo(over: Seq[Attribute]) {
     private val held = new java.util.concurrent.ConcurrentHashMap[Any, Resolved]
 
@@ -107,14 +109,11 @@ object ScdReplay {
     def put(rs: Seq[(Any, Resolved)], out: Seq[Attribute]): Unit = {
       val m = AttributeMap(out.zip(over))
       rs.foreach { case (k, r) =>
-        if (held.size >= MaxStatements) held.clear()
+        if (held.size >= ScdCompiler.MaxReplayStatementsDefault) held.clear()
         held.put(k, r.rebind(m))
       }
     }
   }
-
-  /** The most resolutions one [[Memo]] holds: the default replay cap. */
-  val MaxStatements = 10000
 
   /** Name of the dry run's per-row column of fired statement indices. */
   val FiredColumn = "__scd_fired"
@@ -225,7 +224,9 @@ object ScdReplay {
   }
 
   /** `stmts` resolved over `child`, `df`'s analyzed plan, in one
-    * analyzer pass. */
+    * analyzer pass. A SQL function's body reads a projection of its
+    * arguments: with its nodes eliminated as Spark's optimizer does,
+    * deterministic argument projections fold into the statements. */
   private def resolve(df: DataFrame, child: LogicalPlan,
       stmts: Seq[Statement]): Seq[Resolved] =
     if (stmts.isEmpty) Nil
@@ -235,12 +236,21 @@ object ScdReplay {
           v.as(s"v${i}_$k")
         }
       }
-      val list = df.select(cols: _*).queryExecution.analyzed match {
-        case Project(list, c) if list.size == cols.size && c.output == child.output =>
-          list.map { case Alias(e, _) => e; case e => e }
-        case other => throw new IllegalStateException(
-          "SCD statements must be per-row expressions; resolved to:\n" + other)
+      def strip(e: Expression) = e match { case Alias(x, _) => x; case x => x }
+      def perRow(p: LogicalPlan): Option[Seq[Expression]] = p match {
+        case Project(list, c) if c.output == child.output => Some(list)
+        case Project(list, c: Project) if c.projectList.forall(_.deterministic) =>
+          perRow(c).map { below =>
+            val m = AttributeMap(c.output.zip(below.map(strip)))
+            list.map(_.transformUp { case a: Attribute if m.contains(a) => m(a) })
+          }
+        case _ => None
       }
+      val analyzed = df.select(cols: _*).queryExecution.analyzed
+      val list = perRow(EliminateSQLFunctionNode(analyzed))
+        .filter(_.size == cols.size).getOrElse(throw new IllegalStateException(
+          "SCD statements must be per-row expressions; resolved to:\n" + analyzed))
+        .map(strip)
       val it = list.iterator
       stmts.map { s =>
         Resolved(it.next(), s.sets.map { case (name, _) =>

@@ -105,11 +105,17 @@ class PartitionedSidecarSpec extends SparkSpec {
       "-- time=2020-01-01\nUPDATE t SET v = v + 100;\n")
     Files.writeString(Paths.get(dir, "seg=B", ".updates"),
       "-- time=2021-01-01\nDELETE FROM t WHERE v < 0;\n")
-    val h = ScdReader.history(spark, dir)
+    val hist = ScdReader.history(spark, dir)
+    val h = hist
       .select("id", "v", "valid_from_ms").orderBy("valid_from_ms", "id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val times = h.map(_._3).distinct
     assert(times.length == 3) // epoch, 2020 update, 2021 delete
+    // every snapshot from one replay over one scan
+    val plan = hist.queryExecution.executedPlan
+    assert(plan.collect { case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
+      .size == 1, plan)
+    assert(plan.collect { case r: org.apache.spark.sql.graft.ScdReplayExec => r }.size == 1, plan)
     // epoch snapshot: pristine; 2020: A rows bumped; 2021: B's negative gone
     val at = h.groupBy(_._3).view.mapValues(_.map(x => (x._1, x._2)).toSet)
     assert(at(times(0)) == Set((1L, 10L), (2L, 20L), (3L, 30L), (4L, -5L)))

@@ -255,6 +255,41 @@ class ScdGoldenSpec extends SparkSpec {
     assert(!current.exists(_._4 == "Colin"))
   }
 
+  test("history refuses a SET of its own interval columns on a base without them") {
+    for (c <- Seq("valid_from_ms", "__scd_valid")) {
+      val e = intercept[IllegalStateException](ScdReader.historyText(spark,
+        doctorsDf, s"-- time=2014-09-01\nUPDATE doctors SET $c = 5;\n").collect())
+      assert(e.getMessage.contains(s"UPDATE SET references unknown column '$c'"),
+        e.getMessage)
+    }
+  }
+
+  test("a session SQL function replays like the same call in a SELECT") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("scd_sqlfn").toString
+    (1 to 6).map(i => (i.toLong, i * 10L)).toDF("id", "v").write.mode("overwrite").parquet(dir)
+    // statement 2 reads statement 1's output through the function
+    Files.writeString(java.nio.file.Paths.get(dir, ".updates"),
+      """UPDATE t SET v = v * 2 WHERE scd_fn(id) > 3;
+        |UPDATE t SET v = scd_fn(scd_fn(v)) WHERE id > 2;
+        |""".stripMargin)
+    def read = ScdReader.read(spark, dir).orderBy("id").collect().toSeq
+    def select = spark.read.parquet(dir).selectExpr("id",
+      "CASE WHEN scd_fn(id) > 3 THEN v * 2 ELSE v END AS v")
+      .selectExpr("id", "CASE WHEN id > 2 THEN scd_fn(scd_fn(v)) ELSE v END AS v")
+      .orderBy("id").collect().toSeq
+    try {
+      spark.sql("CREATE TEMPORARY FUNCTION scd_fn(x BIGINT) RETURNS BIGINT RETURN x + 1")
+      assert(read == select)
+      assert(read.map(_.getLong(1)) == Seq(10L, 20L, 62L, 82L, 102L, 122L))
+      // a redefinition shows at the next read: no held resolution
+      spark.sql("CREATE OR REPLACE TEMPORARY FUNCTION scd_fn(x BIGINT) " +
+        "RETURNS BIGINT RETURN x * 10")
+      assert(read == select)
+      assert(read.map(_.getLong(1)) == Seq(20L, 40L, 6000L, 8000L, 10000L, 12000L))
+    } finally spark.sql("DROP TEMPORARY FUNCTION IF EXISTS scd_fn")
+  }
+
   test("sequential composition: later statements see earlier updates") {
     val log =
       """UPDATE doctors SET number = 12 WHERE number = 2;

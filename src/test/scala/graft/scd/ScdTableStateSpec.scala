@@ -255,6 +255,40 @@ class ScdTableStateSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     Files.setLastModifiedTime(f, mtime)
   }
 
+  /** History with no table state: the sidecar's text over a fresh
+    * `spark.read` of the files. */
+  private def coldHistory(dir: String): DataFrame =
+    ScdReader.historyText(spark, spark.read.parquet(dir), sidecar(dir))
+
+  test("history plans one file scan and one replay at every number of times") {
+    val d = table()
+    for (h <- Seq(ScdReader.history(spark, d), coldHistory(d))) {
+      assert(h.columns.toSeq == Seq("k", "v", "name", "seg", "valid_from_ms", "valid_to_ms"))
+      assert(h.select("valid_from_ms").distinct().count() == 3)
+      val replays = collect(h.queryExecution.executedPlan) {
+        case r: org.apache.spark.sql.graft.ScdReplayExec => r
+      }
+      assert(fileScans(h) == 1 && replays.size == 1, h.queryExecution.executedPlan)
+    }
+    // each interval is the as-of read at its start
+    val h = ScdReader.history(spark, d)
+    for (t <- Seq(0L, 1709251200000L, 1717200000000L)) // epoch, 2024-03-01, 2024-06-01
+      assert(rows(h.where($"valid_from_ms" === t).drop("valid_from_ms", "valid_to_ms")) ==
+        rows(cold(d, Some(t.toString))), t)
+  }
+
+  test("history and a warm read in either order equal their cold results") {
+    val asOf = Some("2024-12-01")
+    val d = table()
+    assert(rows(ScdReader.history(spark, d)) == rows(coldHistory(d)))
+    assert(rows(ScdReader.read(spark, d, asOf = asOf)) == rows(cold(d, asOf)))
+    assert(rows(ScdReader.read(spark, d)) == rows(cold(d, None)))
+    val e = table()
+    assert(rows(ScdReader.read(spark, e, asOf = asOf)) == rows(cold(e, asOf)))
+    assert(rows(ScdReader.history(spark, e)) == rows(coldHistory(e)))
+    assert(rows(ScdReader.read(spark, e, asOf = asOf)) == rows(cold(e, asOf)))
+  }
+
   test("the states are bounded and never serve another session") {
     val first = csvTable("k,v\n1,10\n")
     assert(csvColumns(spark, first) == Seq("k", "v"))
