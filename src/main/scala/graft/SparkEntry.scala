@@ -187,76 +187,64 @@ object SparkEntry {
       asOf: Option[String]): DataFrame =
     ScdReader.applyLogText(s, t(s, dir, "customer"), CustomerLog, asOf)
 
-  /** Build a real SCD table directory under target/: customer parquet
-    * plus the `.updates` sidecar — the filesystem-backed path for the
-    * scd_sidecar / scd_compact queries. Built ONCE per (application,
-    * data-dir): the fixture is a pure function of the source table and
-    * [[CustomerLog]], and no board query mutates it (scd_compact runs
-    * with clearLog=false), so per-invocation rebuilds only charged a
-    * fixture write to every scd_* timed run. */
-  private val sidecarDirCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
+  /** The SCD fixture table of `dir` for this application: the
+    * `kind` [[artifact]], built by `build` into its `customer` table
+    * directory, returned as an ABSOLUTE path — `CALL graft.add_update`
+    * and catalog identifiers resolve it from any working directory
+    * (ADVICE r02: the relative form broke under another checkout). */
+  private def scdFixture(kind: String, s: SparkSession, dir: String)(
+      build: String => Unit): String = {
+    def table(p: String) = new java.io.File(p, "customer").getAbsolutePath
+    table(artifact(kind, s, dir)(p => build(table(p))))
+  }
+
+  /** A real SCD table directory: customer parquet plus the `.updates`
+    * sidecar — the filesystem-backed path for the scd_sidecar /
+    * scd_compact queries. The fixture is a pure function of the source
+    * table and [[CustomerLog]], and no board query mutates it
+    * (scd_compact runs with clearLog=false). */
   private def sidecarDir(s: SparkSession, dir: String): String =
-    sidecarDirCache.getOrElseUpdate((s.sparkContext.applicationId, dir), {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      // relative to the working dir (ADVICE r02: an absolute repo path
-      // broke the query under any other checkout location)
-      val tmp = new java.io.File(s"target/scdtmp/$tag/customer").getAbsolutePath
+    scdFixture("scdsidecar", s, dir) { tmp =>
       t(s, dir, "customer").write.mode("overwrite").parquet(tmp)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(tmp, ScdReader.SidecarName), CustomerLog)
-      tmp
-    })
+    }
 
-  /** Build an SCD table dir whose log is authored ENTIRELY through
+  /** An SCD table dir whose log is authored ENTIRELY through
     * `CALL graft.add_update` (round 9): base customer parquet with no
     * sidecar, then two CALLs — the batch-SQL write UX matching the
     * reference's "append a line to `.updates`" (README.md:127-144).
     * The authored log is [[CustomerLog]] with the DELETE's effective
     * time moved to 2030-01-01, so an as-of-2031 read must equal the
     * fixture's now-time view. */
-  private val addUpdateDirCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
   private def addUpdateDir(s: SparkSession, dir: String): String =
-    addUpdateDirCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val tmp = new java.io.File(
-          s"target/scdtmp/$tag/customer_authored").getAbsolutePath
-        t(s, dir, "customer").write.mode("overwrite").parquet(tmp)
-        s.conf.set("spark.sql.catalog.graft",
-          classOf[graft.sources.ScdCatalog].getName)
-        s.sql(s"CALL graft.add_update('$tmp', 'UPDATE customer SET " +
-          "c_acctbal = c_acctbal + 100 WHERE c_mktsegment = " +
-          "''BUILDING'';')").collect()
-        s.sql(s"CALL graft.add_update('$tmp', 'DELETE FROM customer " +
-          "WHERE c_acctbal < 0;', '2030-01-01')").collect()
-        tmp
-      })
+    scdFixture("scdauthored", s, dir) { tmp =>
+      t(s, dir, "customer").write.mode("overwrite").parquet(tmp)
+      s.conf.set("spark.sql.catalog.graft",
+        classOf[graft.sources.ScdCatalog].getName)
+      s.sql(s"CALL graft.add_update('$tmp', 'UPDATE customer SET " +
+        "c_acctbal = c_acctbal + 100 WHERE c_mktsegment = " +
+        "''BUILDING'';')").collect()
+      s.sql(s"CALL graft.add_update('$tmp', 'DELETE FROM customer " +
+        "WHERE c_acctbal < 0;', '2030-01-01')").collect()
+    }
 
-  /** Build a Hive-PARTITIONED SCD table directory under target/:
-    * customer partitioned by c_mktsegment, with a DIFFERENT `.updates`
-    * log inside two of the partition directories (no root log). */
-  private val partitionedScdDirCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
+  /** A Hive-PARTITIONED SCD table directory: customer partitioned by
+    * c_mktsegment, with a DIFFERENT `.updates` log inside two of the
+    * partition directories (no root log). */
   private def partitionedScdDir(s: SparkSession, dir: String): String =
-    partitionedScdDirCache.getOrElseUpdate(
-      (s.sparkContext.applicationId, dir), {
-        val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        val tmp =
-          new java.io.File(s"target/scdtmp/$tag/customer_part").getAbsolutePath
-        t(s, dir, "customer").write.mode("overwrite")
-          .partitionBy("c_mktsegment").parquet(tmp)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(tmp, "c_mktsegment=BUILDING",
-            ScdReader.SidecarName),
-          "UPDATE customer SET c_acctbal = c_acctbal + 100;\n")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(tmp, "c_mktsegment=MACHINERY",
-            ScdReader.SidecarName),
-          "-- time=2024-06-01\nDELETE FROM customer WHERE c_acctbal < 0;\n")
-        tmp
-      })
+    scdFixture("scdpart", s, dir) { tmp =>
+      t(s, dir, "customer").write.mode("overwrite")
+        .partitionBy("c_mktsegment").parquet(tmp)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(tmp, "c_mktsegment=BUILDING",
+          ScdReader.SidecarName),
+        "UPDATE customer SET c_acctbal = c_acctbal + 100;\n")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(tmp, "c_mktsegment=MACHINERY",
+          ScdReader.SidecarName),
+        "-- time=2024-06-01\nDELETE FROM customer WHERE c_acctbal < 0;\n")
+    }
 
   /** Flagship: as-of SCD dimension joined to facts with an aggregate —
     * scan + SCD replay + join + agg in one plan. */

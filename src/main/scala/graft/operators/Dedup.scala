@@ -942,15 +942,9 @@ object Dedup {
     * a dict this small shuffles in a fraction of the prune's own two
     * serialized driver round-trips per serve — which the r17 driver
     * measured as part of the incremental family's 32-core regression
-    * (dedup_containment_incremental 3.40 → 4.22 s). Conf-overridable
-    * (`spark.graft.dict.pruneBytes`) for deployments whose dictionary
-    * rows are unusually wide or narrow. */
-  private val DictPruneBytesDefault: Long = 32L * 1024 * 1024
-
-  private def dictPruneBytes(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.dict.pruneBytes")
-      .map(_.toLong).getOrElse(DictPruneBytesDefault)
+    * (dedup_containment_incremental 3.40 → 4.22 s). A constant: no
+    * caller sets another threshold. */
+  private val DictPruneBytes: Long = 32L * 1024 * 1024
 
   /** Total bytes under `path` via the Hadoop FS the session resolves
     * for it — driver-side metadata, never a Spark job. */
@@ -1272,7 +1266,7 @@ object Dedup {
     // cached rows (the ADVICE r16 determinism contract), with no
     // separate eager-checkpoint job.
     val prune = pathBytes(spark, s"$indexPath/df") >
-        dictPruneBytes(spark) && nightlyRegime(batchDocs, corpus)
+        DictPruneBytes && nightlyRegime(batchDocs, corpus)
     val shB0 = shingles(batchDocs, id, textCol, w)
     val shB = if (prune) shB0.localCheckpoint(false) else shB0
     val stats = batchVocabStats(shB)
@@ -1347,7 +1341,7 @@ object Dedup {
     // count rides the guard job below (r18), with a loud rebuild on
     // the ~n²/2⁶⁴ collision that never happens.
     val prune = pathBytes(spark, s"$indexPath/df") >
-        dictPruneBytes(spark) && nightlyRegime(batchDocs, corpus)
+        DictPruneBytes && nightlyRegime(batchDocs, corpus)
     val shB0 = shingles(batchDocs, id, textCol, w)
     val shB = if (prune) shB0.localCheckpoint(false) else shB0
     val stats = if (prune) Some(batchVocabStats(shB)) else None

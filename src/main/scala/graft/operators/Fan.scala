@@ -37,8 +37,8 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   *      can fill (a 1 k-row fixture no longer pays a 32-way
   *      round-robin exchange plus 32 near-empty tasks in every
   *      downstream stage), large ones still saturate the session.
-  *      `spark.graft.fan.bytesPerTask` (default 64 KB of
-  *      compressed/planned input) parameterizes the work density —
+  *      [[Fan.BytesPerTask]] (64 KB of compressed/planned input)
+  *      sets the work density —
   *      the chains below this operator expand each input byte into
   *      tens of hash/regex ops, which is why the per-task byte share
   *      is deliberately far below a scan split size;
@@ -60,15 +60,14 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
   * every operator here is partition-order-independent (exact-replay
   * discipline). */
 private[graft] object Fan {
-  /** Planned input bytes one fanned task owns (conf-overridable via
-    * `spark.graft.fan.bytesPerTask`). Measured at sf0.1/local[32]
+  /** Planned input bytes one fanned task owns. Measured at sf0.1/local[32]
     * (584 KB documents fixture → 10-way fan), same-host same-subset
     * A/B vs the r17 32-way form: the rows the 32-way overhead hurt
     * recovered — dedup_jaccard_pairs_1k 1.47 → 0.72 s, dedup_jaccard
     * _join 2.53 → 1.42 s, dedup_minhash_lsh 1.84 → 1.03 s — while the
     * fan-out's original beneficiary q_pii_audit held within spread
     * (0.67 → 0.72 s, spread 0.10). */
-  val BytesPerTaskDefault: Long = 64L * 1024
+  val BytesPerTask: Long = 64L * 1024
 
   def out(df: DataFrame): DataFrame = {
     val plan = df.queryExecution.optimizedPlan
@@ -82,10 +81,8 @@ private[graft] object Fan {
     if (!narrowOverScan) df
     else {
       val spark = df.sparkSession
-      val perTask = spark.conf.getOption("spark.graft.fan.bytesPerTask")
-        .map(_.toLong).getOrElse(BytesPerTaskDefault)
       val byWork =
-        (plan.stats.sizeInBytes + perTask - 1) / BigInt(perTask)
+        (plan.stats.sizeInBytes + BytesPerTask - 1) / BigInt(BytesPerTask)
       val target = byWork
         .min(BigInt(spark.sparkContext.defaultParallelism)).toInt
       if (target > 1 && df.rdd.getNumPartitions < target)

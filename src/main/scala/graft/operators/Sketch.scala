@@ -285,29 +285,29 @@ object Sketch {
       .groupBy("stratum", "key").agg(count(lit(1)).as("cnt"))
 
   /** Per-stratum quantiles from a [[hdrSketchBy]] sketch — the
-    * stratified twin of [[hdrQuantiles]]. Join-shape note: the q-list
-    * attaches by EXPLODE (a literal array per stratum row, no join at
-    * all) and the rank scan is an equi-join ON STRATUM with a residual
-    * cum ≥ r filter — hash join, never a nested loop, so a
-    * million-stratum report parallelizes like any aggregation. The
-    * cum window partitions by stratum (≤ ~1 920 rows each). */
+    * stratified twin of [[hdrQuantiles]]. No join at all: ONE window
+    * pass partitioned by stratum (≤ ~1 920 rows each) gives every
+    * bucket its running count `cum` and its stratum's total `n`, the
+    * q-list attaches by EXPLODE (a literal array per bucket row), and
+    * the answer is the least key with cum ≥ r — so a million-stratum
+    * report parallelizes like any aggregation, and one constant
+    * stratum (which the optimizer folds out of any join key) never
+    * turns the rank scan into a nested loop. */
   def hdrQuantilesBy(sketch: DataFrame, subBits: Int,
       qMils: Seq[Int]): DataFrame = {
     require(qMils.nonEmpty && qMils.forall(q => q >= 0 && q <= 1000),
       s"hdrQuantilesBy: q_mil values must be in [0,1000], got $qMils")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("stratum").orderBy("key")
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val cum = sketch.withColumn("cum", sum("cnt").over(w))
-    val ranked = sketch.groupBy("stratum").agg(sum("cnt").as("n"))
-      .withColumn("q_mil",
-        explode(typedLit(qMils.map(_.toLong))))
-      .select(col("stratum"), col("q_mil"),
-        greatest(lit(1L), expr("(n * q_mil + 999) div 1000")).as("r"))
-    val hit = ranked.join(cum, Seq("stratum"))
-      .where(col("cum") >= col("r"))
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("stratum").orderBy("key")
+    val hit = sketch
+      .select(col("stratum"), col("key"),
+        sum("cnt").over(w.rowsBetween(Window.unboundedPreceding,
+          Window.currentRow)).as("cum"),
+        sum("cnt").over(w.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)).as("n"))
+      .withColumn("q_mil", explode(typedLit(qMils.map(_.toLong))))
+      .where(col("cum") >=
+        greatest(lit(1L), expr("(n * q_mil + 999) div 1000")))
       .groupBy("stratum", "q_mil").agg(min("key").as("key"))
     val b = hdrBounds(col("key"), subBits)
     hit.select(col("stratum"), col("q_mil"), col("key"),
@@ -323,34 +323,13 @@ object Sketch {
     * true rank-r value provably lies in [low, low+width−1], so the
     * midpoint's relative error is ≤ 2^{−b−1}).
     *
-    * Plan shape: the rank scan is a window + non-equi broadcast join
-    * over SKETCH rows only (≤ ~1 920 × |qs| — constant, never corpus);
-    * the 1-row total joins in by broadcast. */
+    * Computed as [[hdrQuantilesBy]] over one constant stratum: one
+    * window over the ≤ ~1 920 sketch rows, exploded by the |qs| ranks
+    * — constant, never corpus. An empty sketch reads zero rows. */
   def hdrQuantiles(sketch: DataFrame, subBits: Int,
-      qMils: Seq[Int]): DataFrame = {
-    require(qMils.nonEmpty && qMils.forall(q => q >= 0 && q <= 1000),
-      s"hdrQuantiles: q_mil values must be in [0,1000], got $qMils")
-    val spark = sketch.sparkSession
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy("key")
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val cum = sketch
-      .withColumn("cum", sum("cnt").over(w))
-    val total = sketch.agg(sum("cnt").as("n"))
-    val qs = qMils.toDF("q_mil")
-    val ranked = qs.crossJoin(broadcast(total))
-      .select(col("q_mil").cast("long").as("q_mil"),
-        greatest(lit(1L), expr("(n * q_mil + 999) div 1000")).as("r"))
-    val hit = broadcast(ranked)
-      .join(cum, col("cum") >= col("r"))
-      .groupBy("q_mil").agg(min("key").as("key"))
-    val b = hdrBounds(col("key"), subBits)
-    hit.select(col("q_mil"), col("key"),
-        b.getField("low").as("low"), b.getField("width").as("width"))
-      .withColumn("est_x2", col("low") * 2 + col("width") - 1)
-  }
+      qMils: Seq[Int]): DataFrame =
+    hdrQuantilesBy(sketch.withColumn("stratum", lit(0)), subBits, qMils)
+      .drop("stratum")
 
   /** EXACT type-1 quantiles over raw values — the [[hdrQuantiles]]
     * family's exact twin for when the 2^−b bucket band isn't good
@@ -364,7 +343,10 @@ object Sketch {
     * corpus — never funnel one task; a `sort().limit(r)` or
     * percentile_disc would pay a corpus sort), then the rank pick is
     * a broadcast ≤|q|-row non-equi join + min — each histogram row
-    * meets only the constant q-list ([[hdrQuantiles]]' join shape).
+    * meets only the constant q-list. That pick is why this form keeps
+    * its own body instead of calling [[exactQuantilesBy]] over one
+    * stratum: an equi-join on a constant stratum would hash the whole
+    * corpus-sized value histogram onto one join key.
     *
     * Output: one row per q — (q_mil, v); v keeps the input type. */
   def exactQuantiles(df: DataFrame, valueCol: String,
@@ -393,14 +375,7 @@ object Sketch {
     require(qMils.nonEmpty && qMils.forall(q => q >= 0 && q <= 1000),
       s"exactQuantilesWeighted: q_mil values must be in [0,1000]," +
         s" got $qMils")
-    val wd = col(weightCol).cast("double")
-    val w = when(col(weightCol).isNull, lit(null).cast("long"))
-      .when(wd < 0 || wd =!= floor(wd),
-        raise_error(concat(
-          lit("exactQuantilesWeighted: weights must be non-negative " +
-            s"integers; $weightCol = "),
-          col(weightCol).cast("string"))).cast("long"))
-      .otherwise(col(weightCol).cast("long"))
+    val w = massWeight(weightCol, "exactQuantilesWeighted")
     val rows = df.select(col(valueCol).as("v"), w.as("w"))
       .where(col("v").isNotNull && col("w") > 0)
       .localCheckpoint(false)
@@ -424,14 +399,7 @@ object Sketch {
     require(qMils.nonEmpty && qMils.forall(q => q >= 0 && q <= 1000),
       s"exactQuantilesWeightedBy: q_mil values must be in [0,1000]," +
         s" got $qMils")
-    val wd = col(weightCol).cast("double")
-    val w = when(col(weightCol).isNull, lit(null).cast("long"))
-      .when(wd < 0 || wd =!= floor(wd),
-        raise_error(concat(
-          lit("exactQuantilesWeightedBy: weights must be " +
-            s"non-negative integers; $weightCol = "),
-          col(weightCol).cast("string"))).cast("long"))
-      .otherwise(col(weightCol).cast("long"))
+    val w = massWeight(weightCol, "exactQuantilesWeightedBy")
     val rows = df.select(strataCol.as("stratum"),
         col(valueCol).as("v"), w.as("w"))
       .where(col("stratum").isNotNull && col("v").isNotNull &&
@@ -447,6 +415,19 @@ object Sketch {
     ranked.join(hist, Seq("stratum"))
       .where(col("cum") >= col("r"))
       .groupBy("stratum", "q_mil").agg(min("v").as("v"))
+  }
+
+  /** The per-row mass of the weighted exact quantiles: a NULL weight
+    * reads NULL (no mass), a non-negative integer its long value, and
+    * a negative or fractional one raises naming `op` and the value. */
+  private def massWeight(weightCol: String, op: String): Column = {
+    val wd = col(weightCol).cast("double")
+    when(col(weightCol).isNull, lit(null).cast("long"))
+      .when(wd < 0 || wd =!= floor(wd),
+        raise_error(concat(
+          lit(s"$op: weights must be non-negative integers; $weightCol = "),
+          col(weightCol).cast("string"))).cast("long"))
+      .otherwise(col(weightCol).cast("long"))
   }
 
   /** EXACT median absolute deviation — the robust scale estimate
@@ -615,10 +596,10 @@ object Sketch {
   }
 
   /** STRATIFIED exact quantiles — [[exactQuantiles]] per stratum in
-    * one pass (the [[hdrQuantilesBy]] join-shape rule: the q-list
-    * attaches by explode, the rank pick is an equi-join ON STRATUM
-    * with a residual cum ≥ r filter — hash join, never a nested
-    * loop; per-stratum cums partition by (stratum, bucket)).
+    * one pass (the q-list attaches by explode, the rank pick is an
+    * equi-join ON STRATUM with a residual cum ≥ r filter — hash join,
+    * never a nested loop; per-stratum cums partition by (stratum,
+    * bucket)).
     * Output: (stratum, q_mil, v). */
   def exactQuantilesBy(df: DataFrame, strataCol: Column,
       valueCol: String, qMils: Seq[Int]): DataFrame = {
@@ -1000,46 +981,22 @@ object Sketch {
     * with ONE floor to mils at the end. Convention: PSI < 0.1
     * stable, 0.1–0.25 drifting, > 0.25 shifted.
     *
-    * Output one row: n_buckets, psi_e12, ks_mil. */
-  def hdrDrift(skP: DataFrame, skQ: DataFrame): DataFrame = {
-    val joined = skP.select(col("key"), col("cnt").as("cp"))
-      .join(skQ.select(col("key"), col("cnt").as("cq")),
-        Seq("key"), "full_outer")
-      .select(col("key"), coalesce(col("cp"), lit(0L)).as("cp"),
-        coalesce(col("cq"), lit(0L)).as("cq"))
-      .localCheckpoint(false) // ≤ ~1 920 rows, feeds totals + terms
-    val totals = joined.agg(sum("cp").as("np"), sum("cq").as("nq"),
-      count(lit(1)).as("k"))
-    val pt = (col("cp") + 1).cast("double") / (col("np") + col("k"))
-    val qt = (col("cq") + 1).cast("double") / (col("nq") + col("k"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy("key")
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    joined.crossJoin(broadcast(totals))
-      .withColumn("psi_term",
-        floor((pt - qt) * log(pt / qt) * 1e12).cast("long"))
-      .withColumn("cump", sum("cp").over(w))
-      .withColumn("cumq", sum("cq").over(w))
-      .withColumn("d", abs(col("cump").cast("decimal(38,0)") *
-        col("nq").cast("decimal(38,0)") -
-        col("cumq").cast("decimal(38,0)") *
-          col("np").cast("decimal(38,0)")))
-      .groupBy(col("k").as("n_buckets"))
-      .agg(sum("psi_term").as("psi_e12"),
-        expr("CAST((max(d) * 1000) div (CAST(max(np) AS DECIMAL(38,0))" +
-          " * CAST(max(nq) AS DECIMAL(38,0))) AS BIGINT)").as("ks_mil"))
-  }
+    * Computed as [[hdrDriftBy]] over one constant stratum. Output one
+    * row: n_buckets, psi_e12, ks_mil (NULL when either sketch is empty
+    * — KS against an empty distribution is undefined); two empty
+    * sketches read zero rows. */
+  def hdrDrift(skP: DataFrame, skQ: DataFrame): DataFrame =
+    hdrDriftBy(skP.withColumn("stratum", lit(0)),
+      skQ.withColumn("stratum", lit(0))).drop("stratum")
 
   /** STRATIFIED drift — [[hdrDrift]] per stratum between two
     * [[hdrSketchBy]] artifacts (VERDICT r11 #5: production gates
     * compare "did the crawl shift doc length PER LANGUAGE / SOURCE",
     * not corpus-global). One row per stratum, same PSI/KS arithmetic;
-    * the join shape follows the [[hdrQuantilesBy]] rule — totals
-    * attach by EQUI-join on stratum (hash, AQE broadcasts small
-    * strata tables; never a nested loop) and the cum window
-    * partitions by stratum (≤ ~1 920 rows each), so a million-stratum
-    * report parallelizes like any aggregation.
+    * no join past the bucket merge: ONE window pass partitioned by
+    * stratum (≤ ~1 920 rows each) gives every bucket its running
+    * counts and its stratum's totals, so a million-stratum report
+    * parallelizes like any aggregation.
     *
     * Strata present on only ONE side still report (that is exactly
     * the alert — a language appeared in or vanished from the batch):
@@ -1050,29 +1007,24 @@ object Sketch {
     *
     * Output: stratum, n_buckets, psi_e12, ks_mil. */
   def hdrDriftBy(skP: DataFrame, skQ: DataFrame): DataFrame = {
-    val joined = skP
-      .select(col("stratum"), col("key"), col("cnt").as("cp"))
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("stratum").orderBy("key")
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val all = w.rowsBetween(Window.unboundedPreceding,
+      Window.unboundedFollowing)
+    val pt = (col("cp") + 1).cast("double") / (col("np") + col("k"))
+    val qt = (col("cq") + 1).cast("double") / (col("nq") + col("k"))
+    skP.select(col("stratum"), col("key"), col("cnt").as("cp"))
       .join(skQ.select(col("stratum"), col("key"),
         col("cnt").as("cq")), Seq("stratum", "key"), "full_outer")
       .select(col("stratum"), col("key"),
         coalesce(col("cp"), lit(0L)).as("cp"),
         coalesce(col("cq"), lit(0L)).as("cq"))
-      .localCheckpoint(false) // |strata|·≤1 920 rows: totals + terms
-    val totals = joined.groupBy("stratum")
-      .agg(sum("cp").as("np"), sum("cq").as("nq"),
-        count(lit(1)).as("k"))
-    val pt = (col("cp") + 1).cast("double") / (col("np") + col("k"))
-    val qt = (col("cq") + 1).cast("double") / (col("nq") + col("k"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("stratum").orderBy("key")
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    joined.join(totals, Seq("stratum"))
+      .select(col("*"), sum("cp").over(upTo).as("cump"),
+        sum("cq").over(upTo).as("cumq"), sum("cp").over(all).as("np"),
+        sum("cq").over(all).as("nq"), count(lit(1)).over(all).as("k"))
       .withColumn("psi_term",
         floor((pt - qt) * log(pt / qt) * 1e12).cast("long"))
-      .withColumn("cump", sum("cp").over(w))
-      .withColumn("cumq", sum("cq").over(w))
       .withColumn("d", abs(col("cump").cast("decimal(38,0)") *
         col("nq").cast("decimal(38,0)") -
         col("cumq").cast("decimal(38,0)") *

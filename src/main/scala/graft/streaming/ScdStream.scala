@@ -166,6 +166,8 @@ object ScdStream {
   def nearDupStream(df: DataFrame, id: String, textCol: String,
       maxDist: Int = 3, maxPerBand: Int = 1000): DataFrame = {
     import df.sparkSession.implicits._
+    require(maxDist >= 0 && maxDist <= 63,
+      s"nearDupStream needs 0 <= maxDist <= 63, got $maxDist")
     val bands = maxDist + 1
     val width = 64 / bands
     // per-row signature (simHashColumn): the groupBy form would be a
@@ -173,12 +175,9 @@ object ScdStream {
     // stateful-on-stateful — unsupported in append mode
     val sh = df.select(col(id),
       graft.operators.Dedup.simHashColumn(col(textCol)).as("simhash"))
-    def bkey(i: Int): Column =
-      shiftright(col("simhash"), 64 - width * (i + 1))
-        .bitwiseAND((1L << width) - 1)
     val banded = sh.select(col(id).cast("long"), col("simhash"),
-      explode(array((0 until bands).map(i =>
-        concat_ws("|", lit(i), bkey(i))): _*)).as("band"))
+      explode(array((0 until bands).map(i => concat_ws("|", lit(i),
+        simhashBandBits(col("simhash"), i, width))): _*)).as("band"))
       .as[(Long, Long, String)]
     banded.groupByKey(_._3)
       .flatMapGroupsWithState[BandState, NearDupHit](
@@ -205,8 +204,8 @@ object ScdStream {
   }
 
   /** Band bits j of a 64-bit simhash under `maxDist+1`-band
-    * pigeonholing (shared by the index builder and the stream probe —
-    * the two sides MUST band identically). width == 64 (maxDist = 0,
+    * pigeonholing (shared by [[nearDupStream]], the index builder and
+    * the stream probe — the last two MUST band identically). width == 64 (maxDist = 0,
     * one band) needs the all-ones mask: `(1L << 64) - 1` is 0 under
     * JVM shift semantics, which would collapse every key to one
     * bucket. */
@@ -315,21 +314,33 @@ object ScdStream {
     require(w >= 1 && expectedGrams > 0,
       s"decontaminateStreamGate: w >= 1 and expectedGrams > 0: " +
         s"$w, $expectedGrams")
-    val spark = stream.sparkSession
+    suiteBloom(stream, indexPath, w, expectedGrams,
+        "decontaminateStreamGate").fold(stream) { mightContain =>
+      stream.where(!exists(
+        graft.operators.Dedup.gramArray(col(textCol), w), mightContain))
+    }
+  }
+
+  /** The benchmark suite's w-grams of the [[graft.operators.Dedup
+    * .decontaminationIndexWrite]] artifact at `indexPath`, folded ONCE
+    * into a bloom filter (a bounded driver action — the artifact is
+    * suite-sized) and returned as the per-gram probe `g => might
+    * contain g` over the filter LITERAL (a NULL probe reads false);
+    * None for an empty suite, whose gates pass everything. `op` names
+    * the calling gate in the artifact's w-mismatch error. */
+  private def suiteBloom(stream: DataFrame, indexPath: String, w: Int,
+      expectedGrams: Long, op: String): Option[Column => Column] = {
     val bloomRow = graft.operators.Dedup.decontaminationIndexGrams(
-        spark, indexPath, w, "decontaminateStreamGate")
+        stream.sparkSession, indexPath, w, op)
       .agg(org.apache.spark.sql.graft.CatalystBridge.bloomFilterAgg(
         xxhash64(col("shingle")), expectedGrams).as("bf"))
       .head()
-    if (bloomRow.isNullAt(0)) stream // empty suite: everything passes
+    if (bloomRow.isNullAt(0)) None
     else {
       val bf = lit(bloomRow.getAs[Array[Byte]](0))
-      val hit = exists(
-        graft.operators.Dedup.gramArray(col(textCol), w),
-        g => coalesce(
-          org.apache.spark.sql.graft.CatalystBridge.bloomMightContain(
-            bf, xxhash64(g)), lit(false)))
-      stream.where(!hit)
+      Some(g => coalesce(
+        org.apache.spark.sql.graft.CatalystBridge.bloomMightContain(
+          bf, xxhash64(g)), lit(false)))
     }
   }
 
@@ -367,24 +378,15 @@ object ScdStream {
     require(thresholdMil >= 1 && thresholdMil <= 1000,
       s"decontaminateNearStreamGate: thresholdMil must be in " +
         s"[1,1000], got $thresholdMil")
-    val spark = stream.sparkSession
     // construction-time w validation (ADVICE r13): the artifact's
     // grams are w-grams — a mismatched gate (e.g. the w=4 default
     // against a w=8 decontaminationIndexWrite default) would never
     // hit the bloom and silently pass EVERY doc, inverting the
     // documented no-false-negative bias; fail loud here instead
-    val bloomRow = graft.operators.Dedup.decontaminationIndexGrams(
-        spark, indexPath, w, "decontaminateNearStreamGate")
-      .agg(org.apache.spark.sql.graft.CatalystBridge.bloomFilterAgg(
-        xxhash64(col("shingle")), expectedGrams).as("bf"))
-      .head()
-    if (bloomRow.isNullAt(0)) stream // empty suite: everything passes
-    else {
-      val bf = lit(bloomRow.getAs[Array[Byte]](0))
+    suiteBloom(stream, indexPath, w, expectedGrams,
+        "decontaminateNearStreamGate").fold(stream) { mightContain =>
       val grams = graft.operators.Dedup.gramArray(col(textCol), w)
-      val hits = size(filter(grams, g => coalesce(
-        org.apache.spark.sql.graft.CatalystBridge.bloomMightContain(
-          bf, xxhash64(g)), lit(false))))
+      val hits = size(filter(grams, mightContain))
       stream.where(size(grams) === 0 ||
         hits * 1000 < lit(thresholdMil.toLong) * size(grams))
     }

@@ -82,29 +82,26 @@ class PlanAuditSpec extends SparkSpec {
     "sim_pq_trained" -> 3,      // trained codebook + tables + query
     "sim_sq8_topk" -> 3,        // grid fold ×2 (encode + scan) + query
     "sim_sq8_indexed" -> 2,     // grid fold (scan only) + query
-    "q_bootstrap_ci" -> 1,      // 64-row replicate-CI fold onto totals
-    "q_bootstrap_diff" -> 2,    // same replicate-CI fold + the 1-row
-                                // per-metric means fold
+    "q_bootstrap_ci" -> 0,      // bootstrapMeanCIBy's CI/totals join on
+                                // stratum (was 1: a replicate-CI fold)
+    "q_bootstrap_diff" -> 1,    // the 1-row per-metric means fold
     "q_exact_mad" -> 6,         // two exactQuantiles passes × (1-row
                                 // total fold + ≤1-row rank pick) + the
                                 // 1-row median fold onto the deviation
                                 // pass + the final 1-row assembly —
                                 // every side 1-row/|q|-row bounded
-    "q_curriculum_tiers" -> 6,  // unigramLm's 1-row total fold +
-                                // hdrQuantiles' 2-row q-list × sketch
-                                // rank scan + the ≤2-cut array fold —
-                                // all sketch- or 1-row-bounded sides
-    "q_hdr_drift" -> 2,         // one 1-row (np, nq, k) totals fold per
-                                // compared pair onto ≤1 920 bucket rows
-    "q_hdr_weighted" -> 2,      // hdrQuantiles' 1-row mass-total fold +
-                                // 2-row q-list × ≤1 920-bucket rank scan
-                                // (q_hdr_by_lang needs NO budget — its
-                                // stratified path is equi-join only)
-    "q_hdr_quantile" -> 4,      // 3-row q-list × ≤1 920-bucket sketch
-                                // rank scan + exactQuantiles' 1-row
-                                // total fold + its broadcast rank pick
-                                // (was 6: the cumOver bounds-fold
-                                // BNLJs vanished in r13)
+    "q_curriculum_tiers" -> 3,  // unigramLm's 1-row total fold (planned
+                                // under the scored rows AND under the
+                                // sketch) + the ≤2-cut array fold; the
+                                // hdrQuantiles rank scan is join-free
+                                // (was 6 with its q-list × sketch folds)
+    "q_hdr_drift" -> 0,         // hdrDriftBy's totals join on stratum
+                                // (was 2: one totals fold per pair)
+    "q_hdr_weighted" -> 0,      // hdrQuantilesBy's rank scan is one
+                                // window + explode, join-free (was 2)
+    "q_hdr_quantile" -> 2,      // exactQuantiles' 1-row total fold + its
+                                // broadcast rank pick; the sketch side
+                                // is join-free (was 4)
     "q_source_pareto" -> 1,     // 1-row total-mass fold onto the
                                 // domain-bounded strata table
     "q_mwu_by_lang" -> 0,       // zero since r13 (cumOver literal
@@ -133,8 +130,8 @@ class PlanAuditSpec extends SparkSpec {
     "q_quantile_norm_raw" -> 2, // same folds, raw-score hazard form
     "q_source_gini" -> 0,       // smallDomain plain window since r13 —
                                 // no grid, no folds at all
-    "q_winsorize" -> 3,         // hdrQuantiles' 2 sketch-bounded folds
-                                // + the 1-row clip-cuts fold per row
+    "q_winsorize" -> 1,         // the 1-row clip-cuts fold per row; the
+                                // hdrQuantiles side is join-free (was 3)
     "q_rate_anomaly" -> 3,      // 1-row n/median/MAD folds onto the
                                 // domain-bounded hourly bucket table
     "q_retrieval_ndcg" -> 1,    // bm25TopK's (N, avgdl) fold, inherited
@@ -286,11 +283,11 @@ class PlanAuditSpec extends SparkSpec {
   // bounded-by-construction input; an extra one fails the board.
   // Corpus-sized rank work belongs in Ranks.cumOver's two-level form,
   // whose only partition-less window is its ≤Buckets-row (4096)
-  // offset rollup — that rollup IS most of this list.
+  // offset rollup — that rollup IS most of this list. The rows whose
+  // statistic is a `…By` twin over one stratum (q_gate_auc*, q_mwu_*,
+  // q_rank_corr*, q_bootstrap_*, q_hdr_drift) partition every window
+  // by that stratum and have none.
   private val unpartWinBudget: Map[String, Int] = Map(
-    "q_bootstrap_ci" -> 1,      // rank over the ≤64-row replicate
-                                // means table (B is a constant)
-    "q_bootstrap_diff" -> 1,    // same ≤64-row replicate rank window
     "q_exact_mad" -> 2,         // one cumOver offset rollup per
                                 // exactQuantiles pass (value +
                                 // deviation domains), each ≤4096 rows
@@ -298,17 +295,13 @@ class PlanAuditSpec extends SparkSpec {
                                 // sketch
     "q_funnel" -> 1,            // cum over the |steps|-row funnel
                                 // summary (Sessionize.scala:85)
-    "q_gate_auc" -> 1,          // Ranks.cumOver offset rollup (≤4096
-                                // bucket rows) — the two-level form's
-                                // one by-design constant-size window
-    "q_gate_auc_raw" -> 1,      // same rollup, raw-score hazard row
-    "q_gate_pr" -> 1,           // same rollup (averagePrecision)
+    "q_gate_pr" -> 1,           // averagePrecision's Ranks.cumOver
+                                // offset rollup (≤4096 bucket rows) —
+                                // the two-level form's one by-design
+                                // constant-size window
     "q_gate_calibration" -> 1,  // thresholdSweep's cum over ≤nBins
                                 // bin rows (deliberate — Eval.scala
                                 // scaladoc)
-    "q_hdr_drift" -> 2,         // cum over the two ≤1 920-bucket
-                                // joined sketch tables (same+shifted
-                                // halves union into one plan)
     "q_hdr_quantile" -> 2,      // sketch rank scan over ≤1 920 rows +
                                 // exactQuantiles' cumOver offset
                                 // rollup (was 3 pre-r12: the exact
@@ -316,10 +309,6 @@ class PlanAuditSpec extends SparkSpec {
     "q_hdr_weighted" -> 1,      // rank scan over the ≤1 920-row sketch
     "q_kmv_rollup" -> 2,        // bottom-64 re-cuts: windows over ≤k
                                 // (64) kept hashes, per-shard + merged
-    "q_mwu_test" -> 1,          // Ranks.cumOver offset rollup — the
-                                // r11 single-task corpus window is
-                                // GONE; this is its 4096-row residue
-    "q_mwu_raw" -> 1,           // same, on raw continuous scores
     "q_exact_quantile" -> 1,    // cumOver offset rollup over the
                                 // raw-score histogram buckets (the
                                 // rank pick has no window)
@@ -336,13 +325,6 @@ class PlanAuditSpec extends SparkSpec {
                                 // per-stratum one partitions by
                                 // stratum and doesn't count)
     "q_quantile_norm_raw" -> 1, // same, raw-score hazard row
-    "q_rank_corr" -> 4,         // r13 in-frame assembly unions BOTH
-                                // spearman pairs into ONE final plan:
-                                // 2 rank passes × 2 pairs → four
-                                // ≤4096-row cumOver offset rollups
-                                // (pre-r13 the driver finish split
-                                // them 2-per-construction-plan)
-    "q_rank_corr_raw" -> 2,     // one pair: two rollups, raw doubles
     "q_rate_anomaly" -> 3,      // median/MAD rank windows over the
                                 // domain-bounded hourly bucket table
                                 // (Sessionize.scala:177)

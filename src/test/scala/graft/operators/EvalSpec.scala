@@ -88,6 +88,11 @@ class EvalSpec extends SparkSpec {
       Some(0.5))
     // one class absent: undefined, NULL
     assert(auc(Seq((0.5, 1L), (0.7, 1L))).isEmpty)
+    // an empty input still reads one row, every column NULL
+    val empty = Eval.aucExact(Seq.empty[(Double, Long)].toDF("score",
+      "label"), col("score"), col("label")).collect()
+    assert(empty.length == 1 && (0 to 2).forall(empty.head.isNullAt),
+      empty.toSeq)
   }
 
   test("aucExact: randomized scores match naive pairwise counting") {
@@ -478,6 +483,12 @@ class EvalSpec extends SparkSpec {
     assert(!got.isNullAt(3) && !got.isNullAt(4), got.toString)
     // every surviving replicate resamples the single row -> mean 42
     assert(got.getDouble(3) == 42.0 && got.getDouble(4) == 42.0)
+    // an empty input reads one row: no rows, no replicates, NULL rest
+    val empty = Eval.bootstrapMeanCI(df.where(col("id") < 0), col("m"),
+      col("id")).collect()
+    assert(empty.length == 1, empty.toSeq)
+    assert(empty.head.getLong(0) == 0L && empty.head.getLong(1) == 0L &&
+      (2 to 4).forall(empty.head.isNullAt), empty.head.toString)
   }
 
   test("mannWhitneyUBy: per-stratum ≡ single-stratum MWU; degenerate strata report NULLs") {
@@ -749,6 +760,16 @@ class EvalSpec extends SparkSpec {
     val flat = Seq(("A", 7L), ("A", 7L), ("B", 7L)).toDF("g", "v")
     val f = Eval.mannWhitneyU(flat, col("g"), col("v"), "A", "B").head
     assert(f.getDouble(2) == 0.5 && f.isNullAt(3))
+    // a group without rows (or an empty input) fails at the call
+    val noB = intercept[IllegalArgumentException](
+      Eval.mannWhitneyU(dom, col("g"), col("v"), "A", "C"))
+    assert(noB.getMessage.contains(
+      "mannWhitneyU: both groups need rows — 'A': 20, 'C': 0"),
+      noB.getMessage)
+    val none = intercept[IllegalArgumentException](
+      Eval.mannWhitneyU(dom.where(col("v") < 0), col("g"), col("v"),
+        "A", "B"))
+    assert(none.getMessage.contains("'A': 0, 'B': 0"), none.getMessage)
   }
 
   test("mannWhitneyU: hand-computed U with ties") {
@@ -770,6 +791,11 @@ class EvalSpec extends SparkSpec {
     assert(Eval.spearman(up, col("x"), col("y")).head.getDouble(1) == 1.0)
     assert(Eval.spearman(dn, col("x"), col("y")).head.getDouble(1) == -1.0)
     assert(Eval.spearman(ct, col("x"), col("y")).head.isNullAt(1))
+    // an empty input reads one row: n = 0, rho NULL
+    val empty = Eval.spearman(up.where(col("x") < 0), col("x"), col("y"))
+      .collect()
+    assert(empty.length == 1 && empty.head.getLong(0) == 0L &&
+      empty.head.isNullAt(1), empty.toSeq)
   }
 
   test("spearman: tie-correct average ranks match a plain-Scala Pearson") {

@@ -109,6 +109,12 @@ class HdrSketchSpec extends SparkSpec {
           math.pow(2.0, -(b + 1)) + 1.0 / exact,
           s"q=$q est=$est exact=$exact exceeds relative error bound")
     }
+    // an empty sketch answers no quantile: zero rows, same columns
+    val none = Sketch.hdrQuantiles(
+      Sketch.hdrSketch(df.where(col("x") < 0), "x", b), b, qMils)
+    assert(none.columns.toSeq ==
+      Seq("q_mil", "key", "low", "width", "est_x2"))
+    assert(none.count() == 0)
   }
 
   test("hdr artifact: write + append (no disjointness needed) serves rebuild") {
@@ -182,6 +188,18 @@ class HdrSketchSpec extends SparkSpec {
     val far = Sketch.hdrDrift(lowS, highS).head
     assert(far.getAs[Long]("ks_mil") == 1000L)
     assert(far.getAs[Long]("psi_e12") > zero.getAs[Long]("psi_e12"))
+    // one empty side: PSI stays finite (add-1 smoothing) and KS is
+    // NULL, not a divide-by-zero; two empty sides read zero rows
+    val empty = lowS.where(col("cnt") < 0)
+    val oneSided = Sketch.hdrDrift(a, empty).collect()
+    assert(oneSided.length == 1, oneSided.toSeq)
+    assert(oneSided.head.getAs[Long]("n_buckets") == a.count() &&
+      !oneSided.head.isNullAt(1) && oneSided.head.isNullAt(2),
+      oneSided.head.toString)
+    assert(Sketch.hdrDrift(empty, a).head.isNullAt(2))
+    val none = Sketch.hdrDrift(empty, empty)
+    assert(none.columns.toSeq == Seq("n_buckets", "psi_e12", "ks_mil"))
+    assert(none.count() == 0)
   }
 
   test("exactQuantiles: ceil-rank order statistics, exact; By ≡ single per stratum") {

@@ -270,6 +270,35 @@ class ScdStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("nearDupStream — maxDist = 0 bands the whole signature; maxDist is range-checked") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    // one 64-bit band: an exact copy must meet its original even after
+    // maxPerBand other docs arrived, because distinct docs land in
+    // other bands (a zero band mask would put every doc in one ring)
+    val ms = MemoryStream[(Long, String)]
+    val out = ScdStream.nearDupStream(ms.toDF().toDF("doc_id", "text"),
+      "doc_id", "text", maxDist = 0, maxPerBand = 2)
+    val q = out.writeStream.format("memory").queryName("ndup0")
+      .outputMode("append").start()
+    val a = "exact duplicate detection keeps the original document here"
+    try {
+      ms.addData((1L, a),
+        (2L, "a second unrelated text about rivers mountains and lakes"),
+        (3L, "the third document talks of engines gears and pistons"))
+      q.processAllAvailable()
+      ms.addData((4L, a))
+      q.processAllAvailable()
+      val got = spark.table("ndup0").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == Set((4L, 1L, 0L)), s"exact copy hits: $got")
+    } finally q.stop()
+    val df = ms.toDF().toDF("doc_id", "text")
+    for (bad <- Seq(-1, 64))
+      intercept[IllegalArgumentException](
+        ScdStream.nearDupStream(df, "doc_id", "text", maxDist = bad))
+  }
+
   test("dsirGateStream — stateless gate passes target-like docs, scores match batch") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
