@@ -58,6 +58,75 @@ class MultimodalSpec extends SparkSpec {
     assert(nullRow.isNullAt(1) && nullRow.isNullAt(2))
   }
 
+  test("per-payload contract of the eight decode operators: rows, NULL columns, byte_len") {
+    import javax.sound.sampled._
+    val image = {
+      val img = new java.awt.image.BufferedImage(4, 3,
+        java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", bos)
+      bos.toByteArray
+    }
+    // 400 silent 16-bit samples at 8 kHz: two 25 ms frames
+    val wav = {
+      val out = new java.io.ByteArrayOutputStream()
+      AudioSystem.write(new AudioInputStream(
+        new java.io.ByteArrayInputStream(new Array[Byte](800)),
+        new AudioFormat(8000f, 16, 1, true, false), 400L),
+        AudioFileFormat.Type.WAVE, out)
+      out.toByteArray
+    }
+    val garbage = "neither image nor audio".getBytes("UTF-8")
+    val frame = Seq((1L, image), (2L, wav), (3L, garbage),
+      (4L, null.asInstanceOf[Array[Byte]])).toDF("id", "payload")
+      .repartition(2)
+    assert(frame.rdd.getNumPartitions == 2)
+    val len = Map(1L -> image.length.toLong, 2L -> wav.length.toLong,
+      3L -> garbage.length.toLong)
+    val (img, aud) = (Set(1L), Set(2L))
+    // operator, output, the ids it decodes, rows per decoded id, and
+    // whether an undecodable or NULL payload keeps its row
+    val table = Seq(
+      ("decodeBatched", Multimodal.decodeBatched(frame, "id", "payload"),
+        Set(1L, 2L, 3L), 1, true),
+      ("decodeImages", Multimodal.decodeImages(frame, "id", "payload"), img, 1, true),
+      ("sampleFrames", Multimodal.sampleFrames(frame, "id", "payload"), img, 1, true),
+      ("resizeImages", Multimodal.resizeImages(frame, "id", "payload"), img, 1, true),
+      ("imageAHash", Multimodal.imageAHash(frame, "id", "payload"), img, 1, true),
+      ("imageDHash", Multimodal.imageDHash(frame, "id", "payload"), img, 1, true),
+      ("decodeAudio", Multimodal.decodeAudio(frame, "id", "payload"), aud, 1, true),
+      ("audioFrameFeatures", Multimodal.audioFrameFeatures(frame, "id", "payload"),
+        aud, 2, false))
+    for ((op, out, decoded, perDecoded, keepsRow) <- table) {
+      val fields = out.schema.fieldNames.toSeq
+      assert(fields.head == "id", op)
+      val hasLen = fields.contains("byte_len")
+      assert(hasLen == !Set("sampleFrames", "resizeImages",
+        "audioFrameFeatures")(op), s"$op: $fields")
+      val byId = out.collect().groupBy(_.getLong(0))
+      for (id <- 1L to 4L) {
+        val rows = byId.getOrElse(id, Array.empty[org.apache.spark.sql.Row])
+        val expectRows = if (decoded(id)) perDecoded else if (keepsRow) 1 else 0
+        assert(rows.length == expectRows, s"$op id $id: ${rows.toSeq}")
+        // decoded: nothing NULL; undecodable: all but id and byte_len;
+        // NULL payload: all but id
+        val expectNull =
+          if (decoded(id)) Set.empty[String]
+          else if (id == 4L) fields.tail.toSet
+          else fields.tail.toSet - "byte_len"
+        rows.foreach { r =>
+          val nulls = fields.filter(f => r.isNullAt(r.fieldIndex(f))).toSet
+          assert(nulls == expectNull, s"$op id $id: $r")
+          if (hasLen && id != 4L) assert(r.getAs[Long]("byte_len") == len(id), s"$op id $id")
+        }
+      }
+    }
+    // the injected decoder is trusted: its exception fails the task
+    val boom = Multimodal.decodeBatched(frame, "id", "payload",
+      _ => throw new IllegalStateException("codec crashed"))
+    intercept[org.apache.spark.SparkException](boom.collect())
+  }
+
   test("decodeImages: REAL JDK ImageIO decode — dims + pixel stats; garbage → NULLs") {
     import spark.implicits._
     def png(w: Int, h: Int, rgb: Int): Array[Byte] = {
