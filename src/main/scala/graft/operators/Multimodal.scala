@@ -1,7 +1,14 @@
 package graft.operators
 
+import java.awt.RenderingHints
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import javax.imageio.ImageIO
+import javax.sound.sampled.{AudioFormat, AudioInputStream, AudioSystem}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import scala.util.control.NonFatal
 
 /** Multimodal-column plumbing: treat image/audio/video payloads as
   * opaque `binary` columns with typed metadata, processed by per-row
@@ -35,6 +42,29 @@ import org.apache.spark.sql.{Column, DataFrame}
   * (`spark.sql.files.maxPartitionBytes` tuned so a partition of
   * payloads fits executor memory); [[fakeEmbedding]] stands in for the
   * decoder's feature output deterministically.
+  *
+  * ==Per-payload operators==
+  * [[decodeBatched]], [[decodeAudio]], [[decodeImages]],
+  * [[sampleFrames]], [[resizeImages]], [[imageAHash]], [[imageDHash]]
+  * and [[audioFrameFeatures]] share one scaffold, the Spark-side shape
+  * of a batched media decoder: the input is narrowed to (id, payload),
+  * the output schema is declared up front (the id field, `byte_len`
+  * where the operator reports it, then the operator's own fields), and
+  * one `mapPartitions` streams the rows lazily through the operator's
+  * per-payload function, with per-partition setup (ImageIO's in-memory
+  * mode) done once. Each operator states only its fields and that
+  * function. The contract is the scaffold's, so all eight keep it
+  * alike:
+  *   - a NULL payload (the norm in scraped corpora) keeps its row with
+  *     every field NULL, `byte_len` included;
+  *   - an undecodable payload keeps its row with its real `byte_len`
+  *     and every other field NULL. Undecodable means the JDK codec
+  *     failed in any non-fatal way (unsupported format, corrupt
+  *     bytes): never a failed task;
+  *   - [[audioFrameFeatures]], one row per audio frame, emits no row
+  *     for either;
+  *   - [[decodeBatched]]'s injected decoder is trusted: its exception
+  *     fails the task.
   */
 object Multimodal {
 
@@ -78,50 +108,55 @@ object Multimodal {
     array((0 until n).map(i =>
       Sketch.md5Fraction(concat(lit(s"$i|"), lower(hex(bin)))) * 2.0 - 1.0): _*)
 
-  /** Batched decode plumbing — the Spark-side shape of a real media
-    * decoder (the analogue of a vectorized/batched UDF): one decoder
-    * instance per PARTITION (codecs are expensive to construct),
-    * records streamed through it lazily, output schema declared up
-    * front. The decode itself is injectable and DEFAULTS TO A STUB —
-    * a deterministic fake emitting (width, height, n_frames) from the
-    * payload hash, standing in for the native codec this environment
-    * doesn't ship. Partition sizing governs decoder memory: tune
-    * `spark.sql.files.maxPartitionBytes` so one partition of payloads
-    * fits an executor core.
+  /** The per-payload scaffold (see the object doc). `decode` yields a
+    * row of the operator's `fields` for each output row of a decodable
+    * payload and nothing for an undecodable one; `keepRow = false` drops
+    * undecodable and NULL payloads instead of keeping a NULL row.
+    * `imageIO` decodes in memory: ImageIO's default file cache spools
+    * every payload to a temp file first (a JVM-global switch, set once
+    * per partition). */
+  private def perPayload(df: DataFrame, id: String, binCol: String,
+      byteLen: Boolean, fields: Seq[StructField], keepRow: Boolean = true,
+      imageIO: Boolean = false)(
+      decode: Array[Byte] => IterableOnce[Row]): DataFrame = {
+    val in = df.select(col(id), col(binCol))
+    val lenField = if (byteLen) Seq(StructField("byte_len", LongType)) else Nil
+    val schema = StructType(in.schema.head +: (lenField ++ fields))
+    val nulls = Row.fromSeq(Seq.fill(fields.length)(null))
+    in.mapPartitions { rows =>
+      if (imageIO) ImageIO.setUseCache(false)
+      rows.flatMap { r =>
+        val payload = r.getAs[Array[Byte]](1)
+        val out =
+          if (payload == null) Iterator.empty else decode(payload).iterator
+        val len =
+          if (!byteLen) Nil
+          else Seq(if (payload == null) null else payload.length.toLong)
+        (if (keepRow && !out.hasNext) Iterator.single(nulls) else out)
+          .map(v => Row.fromSeq(r.get(0) +: (len ++ v.toSeq)))
+      }
+    }(Encoders.row(schema))
+  }
+
+  /** Batched decode with an injectable codec — the slot a native media
+    * decoder binds to (the analogue of a vectorized/batched UDF), on
+    * the per-payload scaffold. The decode DEFAULTS TO A STUB
+    * ([[stubDecode]]), standing in for the native codec this
+    * environment doesn't ship. Partition sizing governs decoder memory:
+    * tune `spark.sql.files.maxPartitionBytes` so one partition of
+    * payloads fits an executor core.
     *
     * Output: id, byte_len, width, height, n_frames. */
   def decodeBatched(df: DataFrame, id: String, binCol: String,
       decoder: Array[Byte] => (Int, Int, Int) = stubDecode)
-      : DataFrame = {
-    val session = df.sparkSession
-    val inSchema = df.select(col(id), col(binCol)).schema
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      inSchema.head,
-      org.apache.spark.sql.types.StructField("byte_len",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("width",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("height",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("n_frames",
-        org.apache.spark.sql.types.IntegerType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(id), col(binCol)).mapPartitions { rows =>
-      // per-partition decoder setup happens HERE (once), not per row
-      val decode = decoder
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        if (payload == null)
-          // NULL payload (the norm in scraped corpora) → NULL metadata,
-          // row preserved — matches the expression-based operators
-          org.apache.spark.sql.Row(r.get(0), null, null, null, null)
-        else {
-          val (w, h, f) = decode(payload)
-          org.apache.spark.sql.Row(r.get(0), payload.length.toLong, w, h, f)
-        }
-      }
-    }(enc)
-  }
+      : DataFrame =
+    perPayload(df, id, binCol, byteLen = true, Seq(
+        StructField("width", IntegerType),
+        StructField("height", IntegerType),
+        StructField("n_frames", IntegerType))) { payload =>
+      val (w, h, f) = decoder(payload)
+      Some(Row(w, h, f))
+    }
 
   /** STUB decoder: deterministic dimensions from the payload's bytes —
     * replace with the real codec binding in production. */
@@ -138,109 +173,95 @@ object Multimodal {
     * a BOUNDED prefix of the PCM stream (`maxSampleBytes`, default
     * 1 MiB — an hour-long payload costs the same as a clip, the audio
     * analogue of [[decodeImages]]' 64×64 pixel grid), rounded to 4.
-    * Undecodable payloads (compressed codecs, corrupt bytes) and NULLs
-    * keep their row with NULL audio columns — the honest behavior for
-    * what still needs an external decoder ([[decodeBatched]]).
-    *
-    * Same batched plumbing as [[decodeBatched]]: decode per partition,
-    * rows streamed lazily, output schema declared up front. */
+    * Compressed codecs are undecodable here: they still need an
+    * external decoder ([[decodeBatched]]). NULL and undecodable
+    * payloads follow the scaffold's contract (object doc). */
   def decodeAudio(df: DataFrame, id: String, binCol: String,
-      maxSampleBytes: Int = 1 << 20): DataFrame = {
-    val inSchema = df.select(col(id), col(binCol)).schema
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(
-      inSchema.head,
-      StructField("byte_len", LongType),
-      StructField("sample_rate", IntegerType),
-      StructField("channels", IntegerType),
-      StructField("duration_ms", LongType),
-      StructField("rms", DoubleType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val maxBytes = maxSampleBytes
-    df.select(col(id), col(binCol)).mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        if (payload == null)
-          org.apache.spark.sql.Row(r.get(0), null, null, null, null, null)
-        else {
-          val decoded =
-            try {
-              val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(payload))
-              try {
-                val fmt = in.getFormat
-                val frames = in.getFrameLength
-                val durationMs: Any =
-                  if (frames >= 0 && fmt.getFrameRate > 0)
-                    (frames * 1000.0 / fmt.getFrameRate).toLong
-                  else null
-                val rms = pcmRms(in, fmt, maxBytes)
-                  .map(v => math.rint(v * 10000) / 10000)
-                  .map(Double.box).orNull
-                Some(org.apache.spark.sql.Row(r.get(0),
-                  payload.length.toLong, fmt.getSampleRate.toInt,
-                  fmt.getChannels, durationMs, rms))
-              } finally in.close()
-            } catch {
-              // UnsupportedAudioFileException for non-WAV/AIFF/AU,
-              // anything else for corrupt headers: "not decodable",
-              // never a failed task
-              case scala.util.control.NonFatal(_) => None
-            }
-          decoded.getOrElse(org.apache.spark.sql.Row(r.get(0),
-            payload.length.toLong, null, null, null, null))
-        }
+      maxSampleBytes: Int = 1 << 20): DataFrame =
+    perPayload(df, id, binCol, byteLen = true, Seq(
+        StructField("sample_rate", IntegerType),
+        StructField("channels", IntegerType),
+        StructField("duration_ms", LongType),
+        StructField("rms", DoubleType))) { payload =>
+      readAudio(payload) { in =>
+        val fmt = in.getFormat
+        val frames = in.getFrameLength
+        val durationMs: Any =
+          if (frames >= 0 && fmt.getFrameRate > 0)
+            (frames * 1000.0 / fmt.getFrameRate).toLong
+          else null
+        val rms = pcmRms(in, maxSampleBytes)
+          .map(v => Double.box(math.rint(v * 10000) / 10000)).orNull
+        Row(fmt.getSampleRate.toInt, fmt.getChannels, durationMs, rms)
       }
-    }(enc)
-  }
+    }
 
-  /** Full-scale-normalized RMS over the first `maxBytes` of a PCM
-    * stream; None for encodings the JVM can't hand us as 8/16-bit PCM
-    * (a-law, float, 24-bit...) or an empty stream. All channels pool
-    * into one statistic. */
-  private def pcmRms(in: javax.sound.sampled.AudioInputStream,
-      fmt: javax.sound.sampled.AudioFormat, maxBytes: Int)
-      : Option[Double] = {
-    import javax.sound.sampled.AudioFormat.Encoding
+  /** `f` over the audio stream of a payload the JDK parses, closed
+    * after; None when the payload is undecodable
+    * (`UnsupportedAudioFileException` for other formats, any non-fatal
+    * exception for corrupt headers). */
+  private def readAudio[T](payload: Array[Byte])(
+      f: AudioInputStream => T): Option[T] =
+    try {
+      val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload))
+      try Some(f(in)) finally in.close()
+    } catch { case NonFatal(_) => None }
+
+  /** Full-scale-normalized RMS of [[pcmSamples]], all channels pooled
+    * into one statistic; None for an unsupported encoding or an empty
+    * stream. Streams the samples: the prefix is never held. */
+  private def pcmRms(in: AudioInputStream, maxBytes: Int): Option[Double] =
+    pcmSamples(in, maxBytes).flatMap { samples =>
+      var sumSq = 0.0
+      var count = 0L
+      samples.foreach { v => sumSq += v * v; count += 1 }
+      if (count == 0) None else Some(math.sqrt(sumSq / count))
+    }
+
+  /** Full-scale-normalized samples (all channels interleaved) of the
+    * first `maxBytes` of an 8/16-bit PCM stream, read lazily in 64 KiB
+    * blocks; a block's trailing partial sample is dropped. None for
+    * encodings the JVM can't hand us as 8/16-bit PCM (a-law, float,
+    * 24-bit...). */
+  private def pcmSamples(in: AudioInputStream, maxBytes: Int)
+      : Option[Iterator[Double]] = {
+    val fmt = in.getFormat
     val bits = fmt.getSampleSizeInBits
-    val ok = (fmt.getEncoding == Encoding.PCM_SIGNED ||
-      fmt.getEncoding == Encoding.PCM_UNSIGNED) && (bits == 8 || bits == 16)
-    if (!ok) return None
-    val buf = new Array[Byte](65536)
-    var sumSq = 0.0
-    var count = 0L
-    var readTotal = 0
-    var n = in.read(buf, 0, math.min(buf.length, maxBytes))
-    while (n > 0) {
-      // truncate to whole samples (a read can split a 16-bit sample)
-      val step = bits / 8
-      val whole = n - n % step
-      var i = 0
-      while (i < whole) {
-        val v: Double =
+    val unsigned = fmt.getEncoding == AudioFormat.Encoding.PCM_UNSIGNED
+    val pcm = unsigned || fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED
+    if (!pcm || (bits != 8 && bits != 16)) None
+    else Some(new Iterator[Double] {
+      private val buf = new Array[Byte](65536)
+      private val step = bits / 8
+      private var n = in.read(buf, 0, math.min(buf.length, maxBytes))
+      private var readTotal = 0
+      private var i = 0
+      private def whole = if (n > 0) n - n % step else 0
+      def hasNext: Boolean = {
+        while (i >= whole && n > 0) {
+          readTotal += n
+          n =
+            if (readTotal >= maxBytes) -1
+            else in.read(buf, 0, math.min(buf.length, maxBytes - readTotal))
+          i = 0
+        }
+        i < whole
+      }
+      def next(): Double = {
+        if (!hasNext) throw new NoSuchElementException("pcmSamples")
+        val v =
           if (bits == 8) {
-            if (fmt.getEncoding == Encoding.PCM_UNSIGNED)
-              ((buf(i) & 0xff) - 128) / 128.0
-            else buf(i) / 128.0
+            if (unsigned) ((buf(i) & 0xff) - 128) / 128.0 else buf(i) / 128.0
           } else {
             val (lo, hi) = if (fmt.isBigEndian) (i + 1, i) else (i, i + 1)
             val s = ((buf(hi) << 8) | (buf(lo) & 0xff)).toShort
-            val centered =
-              if (fmt.getEncoding == Encoding.PCM_UNSIGNED)
-                ((s & 0xffff) - 32768).toShort.toInt
-              else s.toInt
-            centered / 32768.0
+            (if (unsigned) ((s & 0xffff) - 32768).toShort.toInt else s.toInt) /
+              32768.0
           }
-        sumSq += v * v
-        count += 1
         i += step
+        v
       }
-      readTotal += n
-      n =
-        if (readTotal >= maxBytes) -1
-        else in.read(buf, 0, math.min(buf.length, maxBytes - readTotal))
-    }
-    if (count == 0) None else Some(math.sqrt(sumSq / count))
+    })
   }
 
   /** REAL image decode — for the formats the JDK itself ships codecs
@@ -248,56 +269,33 @@ object Multimodal {
     * per row, (byte_len, width, height, mean_luma), where mean_luma is
     * the Rec.601 luminance averaged over a bounded pixel grid (≤ 64×64
     * samples, so a 10000×10000 payload costs the same as a thumbnail),
-    * rounded to 4. Undecodable or NULL payloads keep their row with
-    * NULL image columns — the norm in scraped corpora, and the honest
-    * behavior for the audio/video formats that still need an external
-    * codec (see [[decodeBatched]]'s injectable stub for those).
-    *
-    * Same batched plumbing as [[decodeBatched]]: one reader path per
-    * partition, rows streamed lazily, output schema declared up
-    * front. */
-  def decodeImages(df: DataFrame, id: String, binCol: String): DataFrame = {
-    val inSchema = df.select(col(id), col(binCol)).schema
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      inSchema.head,
-      org.apache.spark.sql.types.StructField("byte_len",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("width",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("height",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("mean_luma",
-        org.apache.spark.sql.types.DoubleType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(id), col(binCol)).mapPartitions { rows =>
-      // in-memory decode: the default ImageIO file-cache spools every
-      // payload to a temp file first (per-partition setup; JVM-global)
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        if (payload == null)
-          org.apache.spark.sql.Row(r.get(0), null, null, null, null)
-        else {
-          // JDK codecs throw RuntimeExceptions (CMMException, AIOOBE…)
-          // on corrupt payloads, not just IOException — any failure
-          // means "not decodable", never a failed task
-          val img =
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(payload))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (img == null)
-            org.apache.spark.sql.Row(r.get(0), payload.length.toLong,
-              null, null, null)
-          else
-            org.apache.spark.sql.Row(r.get(0), payload.length.toLong,
-              img.getWidth, img.getHeight, meanLuma(img))
-        }
-      }
-    }(enc)
-  }
+    * rounded to 4. NULL and undecodable payloads follow the scaffold's
+    * contract (object doc); audio/video formats that still need an
+    * external codec go through [[decodeBatched]]'s injectable slot. */
+  def decodeImages(df: DataFrame, id: String, binCol: String): DataFrame =
+    perPayload(df, id, binCol, byteLen = true, Seq(
+        StructField("width", IntegerType),
+        StructField("height", IntegerType),
+        StructField("mean_luma", DoubleType)), imageIO = true) { payload =>
+      readImage(payload).map(img =>
+        Row(img.getWidth, img.getHeight, meanLuma(img)))
+    }
 
-  /** Sampled mean luma of a decoded frame (≤ 64×64 grid). */
-  private def meanLuma(img: java.awt.image.BufferedImage): Double = {
+  /** ImageIO decode of one payload; None when it is undecodable. The
+    * JDK codecs throw RuntimeExceptions (CMMException, AIOOBE…) on
+    * corrupt payloads, not just IOException, so any non-fatal failure
+    * counts. */
+  private def readImage(payload: Array[Byte]): Option[BufferedImage] =
+    try Option(ImageIO.read(new ByteArrayInputStream(payload)))
+    catch { case NonFatal(_) => None }
+
+  /** Rec.601 luma of a packed RGB pixel, on the 0–255 scale. */
+  private def luma(rgb: Int): Double =
+    0.299 * ((rgb >> 16) & 0xff) + 0.587 * ((rgb >> 8) & 0xff) +
+      0.114 * (rgb & 0xff)
+
+  /** Sampled mean luma of a decoded frame (≤ 64×64 grid), in [0, 1]. */
+  private def meanLuma(img: BufferedImage): Double = {
     val (w, h) = (img.getWidth, img.getHeight)
     val (sx, sy) = ((w + 63) / 64, (h + 63) / 64)
     var sum = 0.0; var n = 0L
@@ -305,9 +303,7 @@ object Multimodal {
     while (y < h) {
       var x = 0
       while (x < w) {
-        val rgb = img.getRGB(x, y)
-        sum += (0.299 * ((rgb >> 16) & 0xff) +
-          0.587 * ((rgb >> 8) & 0xff) + 0.114 * (rgb & 0xff)) / 255.0
+        sum += luma(img.getRGB(x, y)) / 255.0
         n += 1
         x += sx
       }
@@ -317,6 +313,17 @@ object Multimodal {
       .toDouble
   }
 
+  /** Bilinear `w`×`h` RGB thumbnail of a decoded image. */
+  private def thumbnail(img: BufferedImage, w: Int, h: Int): BufferedImage = {
+    val thumb = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+    val g = thumb.createGraphics()
+    g.setRenderingHint(RenderingHints.KEY_INTERPOLATION,
+      RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+    g.drawImage(img, 0, 0, w, h, null)
+    g.dispose()
+    thumb
+  }
+
   /** REAL frame sampling for multi-frame containers the JDK decodes
     * itself — animated GIF, the one video-ish format with a pure-JVM
     * codec: up to `maxFrames` frames sampled EVENLY across the
@@ -324,120 +331,80 @@ object Multimodal {
     * and reduced to per-frame stats. This is the video-preprocessing
     * shape (probe frame count → sample → decode → featurize) running
     * on real frames; compressed video (mp4/webm) stays in the
-    * documented [[decodeBatched]] injectable slot — same mapPartitions
-    * shape, a native decoder swapped in.
+    * documented [[decodeBatched]] injectable slot.
     *
-    * Single-frame images yield one sampled frame; NULL/undecodable
-    * payloads keep their row with NULL stats (never a failed task).
-    * GIF delta frames decode at their own (possibly smaller) raster
-    * dims — the honest per-frame numbers.
+    * Single-frame images yield one sampled frame; NULL and undecodable
+    * payloads follow the scaffold's contract (object doc). GIF delta
+    * frames decode at their own (possibly smaller) raster dims — the
+    * honest per-frame numbers.
     *
     * Output: id, n_frames, frames array<struct<frame_idx, width,
     * height, mean_luma>> (≤ maxFrames elements). */
   def sampleFrames(df: DataFrame, id: String, binCol: String,
       maxFrames: Int = 4): DataFrame = {
     require(maxFrames >= 1, s"maxFrames must be >= 1: $maxFrames")
-    import org.apache.spark.sql.types._
-    val inSchema = df.select(col(id), col(binCol)).schema
     val frameT = StructType(Seq(
       StructField("frame_idx", IntegerType),
       StructField("width", IntegerType),
       StructField("height", IntegerType),
       StructField("mean_luma", DoubleType)))
-    val outSchema = StructType(Seq(
-      inSchema.head,
-      StructField("n_frames", IntegerType),
-      StructField("frames", ArrayType(frameT))))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(id), col(binCol)).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        val decoded: Option[(Int, Seq[org.apache.spark.sql.Row])] =
-          if (payload == null) None
-          else try {
-            val iis = javax.imageio.ImageIO.createImageInputStream(
-              new java.io.ByteArrayInputStream(payload))
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (!readers.hasNext) None
-            else {
-              val reader = readers.next()
-              try {
-                reader.setInput(iis)
-                val n = reader.getNumImages(true)
-                val picks =
-                  if (n <= maxFrames) 0 until n
-                  // even sampling, first frame anchored
-                  else (0 until maxFrames).map(i => i * n / maxFrames)
-                val frames = picks.map { idx =>
-                  val img = reader.read(idx)
-                  org.apache.spark.sql.Row(idx, img.getWidth,
-                    img.getHeight, meanLuma(img))
-                }
-                Some((n, frames))
-              } finally reader.dispose()
+    perPayload(df, id, binCol, byteLen = false, Seq(
+        StructField("n_frames", IntegerType),
+        StructField("frames", ArrayType(frameT))), imageIO = true) { payload =>
+      try {
+        val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(payload))
+        val readers = ImageIO.getImageReaders(iis)
+        if (!readers.hasNext) None
+        else {
+          val reader = readers.next()
+          try {
+            reader.setInput(iis)
+            val n = reader.getNumImages(true)
+            val picks =
+              if (n <= maxFrames) 0 until n
+              // even sampling, first frame anchored
+              else (0 until maxFrames).map(i => i * n / maxFrames)
+            val frames = picks.map { idx =>
+              val img = reader.read(idx)
+              Row(idx, img.getWidth, img.getHeight, meanLuma(img))
             }
-          } catch { case scala.util.control.NonFatal(_) => None }
-        decoded match {
-          case Some((n, frames)) =>
-            org.apache.spark.sql.Row(r.get(0), n, frames)
-          case None => org.apache.spark.sql.Row(r.get(0), null, null)
+            Some(Row(n, frames))
+          } finally reader.dispose()
         }
-      }
-    }(enc)
+      } catch { case NonFatal(_) => None }
+    }
   }
 
   /** REAL image resize — aspect-preserving thumbnail capped at
     * `maxDim` on the long side, re-encoded as PNG, again through the
     * JDK's own codecs (no external library). The preprocessing shape
-    * of a vision-training pipeline: decode → bilinear resize → encode,
-    * one codec path per partition, rows streamed lazily. Undecodable
-    * or NULL payloads keep their row with a NULL thumbnail. Output:
-    * id, width, height (thumbnail dims), thumb_png binary. */
+    * of a vision-training pipeline: decode → bilinear resize → encode.
+    * NULL and undecodable payloads follow the scaffold's contract
+    * (object doc). Output: id, width, height (thumbnail dims), thumb_png
+    * binary. */
   def resizeImages(df: DataFrame, id: String, binCol: String,
       maxDim: Int = 64): DataFrame = {
     require(maxDim >= 1, s"maxDim must be >= 1: $maxDim")
-    val inSchema = df.select(col(id), col(binCol)).schema
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      inSchema.head,
-      org.apache.spark.sql.types.StructField("width",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("height",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("thumb_png",
-        org.apache.spark.sql.types.BinaryType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(id), col(binCol)).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        val img =
-          if (payload == null) null
-          else
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(payload))
-            catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) org.apache.spark.sql.Row(r.get(0), null, null, null)
-        else {
-          val scale =
-            math.min(1.0, maxDim.toDouble / math.max(img.getWidth, img.getHeight))
-          val (w, h) = (math.max(1, math.round(img.getWidth * scale).toInt),
-            math.max(1, math.round(img.getHeight * scale).toInt))
-          val thumb = new java.awt.image.BufferedImage(w, h,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = thumb.createGraphics()
-          g.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(img, 0, 0, w, h, null)
-          g.dispose()
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(thumb, "png", bos)
-          org.apache.spark.sql.Row(r.get(0), w, h, bos.toByteArray)
-        }
+    perPayload(df, id, binCol, byteLen = false, Seq(
+        StructField("width", IntegerType),
+        StructField("height", IntegerType),
+        StructField("thumb_png", BinaryType)), imageIO = true) { payload =>
+      readImage(payload).map { img =>
+        val scale =
+          math.min(1.0, maxDim.toDouble / math.max(img.getWidth, img.getHeight))
+        val (w, h) = (math.max(1, math.round(img.getWidth * scale).toInt),
+          math.max(1, math.round(img.getHeight * scale).toInt))
+        val bos = new ByteArrayOutputStream()
+        ImageIO.write(thumbnail(img, w, h), "png", bos)
+        Row(w, h, bos.toByteArray)
       }
-    }(enc)
+    }
   }
+
+  /** A 64-bit signature from 64 bit tests, packed row-major: test 0 →
+    * bit 63. */
+  private def packBits(bit: Int => Boolean): Long =
+    (0 until 64).foldLeft(0L)((h, i) => if (bit(i)) h | (1L << (63 - i)) else h)
 
   /** REAL perceptual image hash (average hash): decode → 8×8 bilinear
     * grayscale thumbnail → 64-bit signature, bit = pixel luma at or
@@ -448,59 +415,18 @@ object Multimodal {
     * SimHash ([[imageNearDups]]). Known aHash limit: uniform images
     * all hash to the same all-ones signature regardless of color —
     * block on `contentMeta`'s md5 first if exact-byte dups dominate.
-    * Undecodable or NULL payloads keep their row with a NULL hash.
-    * Output: id, byte_len, ahash (long). */
-  def imageAHash(df: DataFrame, id: String, binCol: String): DataFrame = {
-    val inSchema = df.select(col(id), col(binCol)).schema
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      inSchema.head,
-      org.apache.spark.sql.types.StructField("byte_len",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ahash",
-        org.apache.spark.sql.types.LongType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(id), col(binCol)).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        val img =
-          if (payload == null) null
-          else
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(payload))
-            catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null)
-          org.apache.spark.sql.Row(r.get(0),
-            if (payload == null) null else payload.length.toLong, null)
-        else {
-          val thumb = new java.awt.image.BufferedImage(8, 8,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = thumb.createGraphics()
-          g.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(img, 0, 0, 8, 8, null)
-          g.dispose()
-          val luma = new Array[Double](64)
-          var i = 0
-          while (i < 64) {
-            val rgb = thumb.getRGB(i % 8, i / 8)
-            luma(i) = 0.299 * ((rgb >> 16) & 0xff) +
-              0.587 * ((rgb >> 8) & 0xff) + 0.114 * (rgb & 0xff)
-            i += 1
-          }
-          val mean = luma.sum / 64
-          var hash = 0L
-          i = 0
-          while (i < 64) {
-            if (luma(i) >= mean) hash |= (1L << (63 - i))
-            i += 1
-          }
-          org.apache.spark.sql.Row(r.get(0), payload.length.toLong, hash)
-        }
+    * NULL and undecodable payloads follow the scaffold's contract
+    * (object doc). Output: id, byte_len, ahash (long). */
+  def imageAHash(df: DataFrame, id: String, binCol: String): DataFrame =
+    perPayload(df, id, binCol, byteLen = true,
+        Seq(StructField("ahash", LongType)), imageIO = true) { payload =>
+      readImage(payload).map { img =>
+        val thumb = thumbnail(img, 8, 8)
+        val l = Array.tabulate(64)(i => luma(thumb.getRGB(i % 8, i / 8)))
+        val mean = l.sum / 64
+        Row(packBits(i => l(i) >= mean))
       }
-    }(enc)
-  }
+    }
 
   /** REAL difference hash (dHash) — [[imageAHash]]'s gradient
     * sibling: 9×8 bilinear grayscale, bit = luma[x] < luma[x+1] per
@@ -508,56 +434,17 @@ object Multimodal {
     * survive global brightness/contrast shifts that move aHash's mean
     * threshold, and a uniform image hashes to all-zeros instead of
     * aHash's degenerate all-ones — the standard production pairing is
-    * "band on dHash, verify on aHash ∧ dHash". Same plumbing,
-    * same NULL contract. Output: id, byte_len, dhash (long). */
-  def imageDHash(df: DataFrame, id: String, binCol: String): DataFrame = {
-    val inSchema = df.select(col(id), col(binCol)).schema
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      inSchema.head,
-      org.apache.spark.sql.types.StructField("byte_len",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("dhash",
-        org.apache.spark.sql.types.LongType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.select(col(id), col(binCol)).mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        val img =
-          if (payload == null) null
-          else
-            try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(payload))
-            catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null)
-          org.apache.spark.sql.Row(r.get(0),
-            if (payload == null) null else payload.length.toLong, null)
-        else {
-          val thumb = new java.awt.image.BufferedImage(9, 8,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = thumb.createGraphics()
-          g.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(img, 0, 0, 9, 8, null)
-          g.dispose()
-          def luma(x: Int, y: Int): Double = {
-            val rgb = thumb.getRGB(x, y)
-            0.299 * ((rgb >> 16) & 0xff) + 0.587 * ((rgb >> 8) & 0xff) +
-              0.114 * (rgb & 0xff)
-          }
-          var hash = 0L
-          var i = 0
-          while (i < 64) {
-            val (x, y) = (i % 8, i / 8)
-            if (luma(x, y) < luma(x + 1, y)) hash |= (1L << (63 - i))
-            i += 1
-          }
-          org.apache.spark.sql.Row(r.get(0), payload.length.toLong, hash)
-        }
+    * "band on dHash, verify on aHash ∧ dHash". Output: id, byte_len,
+    * dhash (long). */
+  def imageDHash(df: DataFrame, id: String, binCol: String): DataFrame =
+    perPayload(df, id, binCol, byteLen = true,
+        Seq(StructField("dhash", LongType)), imageIO = true) { payload =>
+      readImage(payload).map { img =>
+        val thumb = thumbnail(img, 9, 8)
+        def l(x: Int, y: Int): Double = luma(thumb.getRGB(x, y))
+        Row(packBits(i => l(i % 8, i / 8) < l(i % 8 + 1, i / 8)))
       }
-    }(enc)
-  }
+    }
 
   /** Near-duplicate IMAGES via aHash + Hamming banding — the visual
     * twin of text SimHash dedup, end-to-end real in this environment
@@ -580,61 +467,33 @@ object Multimodal {
     * for voiced speech/silence; RMS ≈ 0 marks trimmable silence).
     * Channels pool into one statistic per frame (the [[pcmRms]]
     * convention); trailing partial frames are emitted with their true
-    * n_samples. Same batched one-reader-per-partition plumbing as
-    * [[decodeAudio]]; non-PCM/undecodable payloads emit NO frame rows
-    * (join back to [[decodeAudio]] for their NULL-metadata row).
+    * n_samples. Non-PCM, undecodable and NULL payloads emit NO frame
+    * rows (join back to [[decodeAudio]] for their NULL-metadata row).
     * Output: id, frame_idx, n_samples, rms, zcr (both rounded 4). */
   def audioFrameFeatures(df: DataFrame, id: String, binCol: String,
       frameMs: Int = 25, maxSampleBytes: Int = 1 << 20): DataFrame = {
     require(frameMs >= 1, s"frameMs must be >= 1: $frameMs")
-    val inSchema = df.select(col(id), col(binCol)).schema
-    import org.apache.spark.sql.types._
-    val outSchema = StructType(Seq(
-      inSchema.head,
-      StructField("frame_idx", LongType),
-      StructField("n_samples", LongType),
-      StructField("rms", DoubleType),
-      StructField("zcr", DoubleType)))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    val maxBytes = maxSampleBytes
-    val fMs = frameMs
-    df.select(col(id), col(binCol)).mapPartitions { rows =>
-      rows.flatMap { r =>
-        val payload = r.getAs[Array[Byte]](1)
-        if (payload == null) Iterator.empty
-        else
-          try {
-            val in = javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(payload))
-            try {
-              val fmt = in.getFormat
-              pcmSamples(in, fmt, maxBytes) match {
-                case None => Iterator.empty
-                case Some(samples) =>
-                  val perFrame = math.max(1,
-                    (fmt.getSampleRate * fmt.getChannels * fMs / 1000.0)
-                      .toInt)
-                  samples.grouped(perFrame).zipWithIndex.map {
-                    case (fr, idx) =>
-                      val n = fr.length
-                      val rms = math.sqrt(fr.map(v => v * v).sum / n)
-                      val crossings = fr.iterator.sliding(2)
-                        .withPartial(false)
-                        .count(p => (p.head < 0) != (p(1) < 0))
-                      val zcr =
-                        if (n < 2) 0.0
-                        else crossings.toDouble / (n - 1)
-                      org.apache.spark.sql.Row(r.get(0), idx.toLong,
-                        n.toLong, math.rint(rms * 10000) / 10000,
-                        math.rint(zcr * 10000) / 10000)
-                  }.toVector.iterator
-              }
-            } finally in.close()
-          } catch {
-            case scala.util.control.NonFatal(_) => Iterator.empty
-          }
-      }
-    }(enc)
+    perPayload(df, id, binCol, byteLen = false, Seq(
+        StructField("frame_idx", LongType),
+        StructField("n_samples", LongType),
+        StructField("rms", DoubleType),
+        StructField("zcr", DoubleType)), keepRow = false) { payload =>
+      readAudio(payload) { in =>
+        val fmt = in.getFormat
+        val perFrame = math.max(1,
+          (fmt.getSampleRate * fmt.getChannels * frameMs / 1000.0).toInt)
+        pcmSamples(in, maxSampleBytes).iterator.flatMap(_.grouped(perFrame))
+          .zipWithIndex.map { case (fr, idx) =>
+            val n = fr.length
+            val rms = math.sqrt(fr.map(v => v * v).sum / n)
+            val crossings = fr.iterator.sliding(2).withPartial(false)
+              .count(p => (p.head < 0) != (p(1) < 0))
+            val zcr = if (n < 2) 0.0 else crossings.toDouble / (n - 1)
+            Row(idx.toLong, n.toLong, math.rint(rms * 10000) / 10000,
+              math.rint(zcr * 10000) / 10000)
+          }.toVector
+      }.getOrElse(Vector.empty)
+    }
   }
 
   /** Energy-based audio segmentation (VAD-ish) over a frame table —
@@ -674,54 +533,6 @@ object Multimodal {
         avg(col("rms")).as("mean_rms"))
       .withColumn("seg_idx", col("__seg") - 1)
       .drop("__seg")
-  }
-
-  /** Full-scale-normalized samples (all channels interleaved) of the
-    * first `maxBytes` of an 8/16-bit PCM stream — the decode loop of
-    * [[pcmRms]] factored to a sample vector for framewise features.
-    * None for unsupported encodings or an empty stream. */
-  private def pcmSamples(in: javax.sound.sampled.AudioInputStream,
-      fmt: javax.sound.sampled.AudioFormat, maxBytes: Int)
-      : Option[Vector[Double]] = {
-    import javax.sound.sampled.AudioFormat.Encoding
-    val bits = fmt.getSampleSizeInBits
-    val ok = (fmt.getEncoding == Encoding.PCM_SIGNED ||
-      fmt.getEncoding == Encoding.PCM_UNSIGNED) && (bits == 8 || bits == 16)
-    if (!ok) return None
-    val buf = new Array[Byte](65536)
-    val out = Vector.newBuilder[Double]
-    var readTotal = 0
-    var count = 0L
-    var n = in.read(buf, 0, math.min(buf.length, maxBytes))
-    while (n > 0) {
-      val step = bits / 8
-      val whole = n - n % step
-      var i = 0
-      while (i < whole) {
-        val v: Double =
-          if (bits == 8) {
-            if (fmt.getEncoding == Encoding.PCM_UNSIGNED)
-              ((buf(i) & 0xff) - 128) / 128.0
-            else buf(i) / 128.0
-          } else {
-            val (lo, hi) = if (fmt.isBigEndian) (i + 1, i) else (i, i + 1)
-            val s = ((buf(hi) << 8) | (buf(lo) & 0xff)).toShort
-            val centered =
-              if (fmt.getEncoding == Encoding.PCM_UNSIGNED)
-                ((s & 0xffff) - 32768).toShort.toInt
-              else s.toInt
-            centered / 32768.0
-          }
-        out += v
-        count += 1
-        i += step
-      }
-      readTotal += n
-      n =
-        if (readTotal >= maxBytes) -1
-        else in.read(buf, 0, math.min(buf.length, maxBytes - readTotal))
-    }
-    if (count == 0) None else Some(out.result())
   }
 
   /** Content-defined chunk fingerprints (Gear/FastCDC family, native
