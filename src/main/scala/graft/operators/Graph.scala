@@ -52,17 +52,11 @@ object Graph {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct out of range: $dampingPct")
     val e = cleanEdges(edges, src, dst)
-    // node set from ONE evaluation of e (r17): the src/dst self-union
-    // read the checkpointed edges twice in the same stage — the second
-    // branch's tasks block on the BlockManager per-block lock while the
-    // first computes each block. explode reads once; same distinct set.
     // lazy + count (r18, one job instead of two): the count action is
     // the checkpoint's single-consumer materializer — it computes and
     // caches the blocks (and `e` underneath), so the loop's per-round
     // base-union branches read cached blocks
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-      .localCheckpoint(false)
+    val nodes = nodesOf(e).localCheckpoint(false)
     val n = nodes.count()
     require(n > 0,
       "pageRank: empty graph after null/self-loop filtering " +
@@ -89,8 +83,7 @@ object Graph {
     val seedCol = seeds.columns.head
     val sd = seeds.select(col(seedCol).cast("long").as("node"))
       .distinct().localCheckpoint()
-    val nodesAll = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
+    val nodesAll = nodesOf(e)
       .join(broadcast(sd.select(col("node"), lit(1L).as("__seed"))),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("__seed"), lit(0L)).as("seed"))
@@ -145,9 +138,7 @@ object Graph {
     // checkpoint AND `e`, so eo's self-join below — two concurrent
     // branches over e — reads cached blocks instead of racing the
     // per-block cache locks
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-      .localCheckpoint(false)
+    val nodes = nodesOf(e).localCheckpoint(false)
     val n = nodes.count()
     val eo = e.join(e.groupBy("src").agg(sum(col("w")).as("wsum")),
         "src")
@@ -237,6 +228,28 @@ object Graph {
     if (checkpoint) e.localCheckpoint(false) else e
   }
 
+  /** Every endpoint of the clean edge list `e` once, as `node`. ONE
+    * read of `e` (r17): the src/dst self-union read a checkpointed `e`
+    * twice in the same stage — the second branch's tasks blocked on the
+    * BlockManager per-block lock while the first computed each block;
+    * explode gives the same distinct set. Not checkpointed: each caller
+    * picks eager or lazy. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(explode(array(col("src"), col("dst"))).as("node")).distinct()
+
+  /** The undirected simple graph of `edges`: ids cast to long, NULL
+    * endpoints and self-loops dropped, each edge once as (a, b) with
+    * a < b. Not checkpointed: each caller picks its own. */
+  private def undirected(edges: DataFrame, src: String,
+      dst: String): DataFrame =
+    edges
+      .select(col(src).cast("long").as("x"), col(dst).cast("long").as("y"))
+      .where(col("x").isNotNull && col("y").isNotNull &&
+        col("x") =!= col("y"))
+      .select(least(col("x"), col("y")).as("a"),
+        greatest(col("x"), col("y")).as("b"))
+      .distinct()
+
   /** Out-degree attached to every edge row, hash-partitioned by src
     * and pinned — the |E|-row table every iteration probes without
     * moving it again. */
@@ -317,12 +330,7 @@ object Graph {
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct out of range: $dampingPct")
     val e = cleanEdges(edges, src, dst)
-    // node set from ONE evaluation of e (r17): the src/dst self-union
-    // read the checkpointed edges twice in the same stage — the second
-    // branch's tasks block on the BlockManager per-block lock while the
-    // first computes each block. explode reads once; same distinct set.
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
+    val nodes = nodesOf(e)
       .localCheckpoint(false) // the count below materializes it
     val n = nodes.count()
     require(n > 0, "pageRankIndexWrite: empty graph after " +
@@ -382,9 +390,7 @@ object Graph {
     val e = cleanEdges(edges, src, dst, checkpoint = false)
       .repartition(col("src"))
       .localCheckpoint()
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-      .localCheckpoint()
+    val nodes = nodesOf(e).localCheckpoint()
     // one half-step: fold `scoreCol` across edges from `fromSide` to
     // `toSide`, zero-fill, renormalize to max = 1e6.
     // ONE job and ONE exchange per half-step (r18, guide §2.4): the
@@ -519,8 +525,7 @@ object Graph {
           .partitionBy("src").orderBy("dst")) - 1)
       .join(e.groupBy("src").agg(count(lit(1)).as("odeg")), Seq("src"))
       .localCheckpoint()
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
+    val nodes = nodesOf(e)
     var walks = nodes
       .select(col("node").as("start"),
         explode(expr(s"sequence(CAST(1 AS BIGINT), CAST($walksPerNode AS BIGINT))"))
@@ -578,14 +583,7 @@ object Graph {
     def degreesOf(und: DataFrame): DataFrame =
       und.select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("d"))
-    var cur = edges
-      .select(col(src).cast("long").as("x"), col(dst).cast("long").as("y"))
-      .where(col("x").isNotNull && col("y").isNotNull &&
-        col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .distinct()
-      .localCheckpoint()
+    var cur = undirected(edges, src, dst).localCheckpoint()
     var rounds = 0
     var converged = false
     while (!converged) {
@@ -614,15 +612,7 @@ object Graph {
     * [[localClustering]]. */
   private def orientedParts(edges: DataFrame, src: String,
       dst: String): (DataFrame, DataFrame) = {
-    val und = edges
-      .select(col(src).cast("long").as("x"),
-        col(dst).cast("long").as("y"))
-      .where(col("x").isNotNull && col("y").isNotNull &&
-        col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .distinct()
-      .localCheckpoint()
+    val und = undirected(edges, src, dst).localCheckpoint()
     val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("d"))
     val withDeg = und
@@ -677,13 +667,7 @@ object Graph {
       checkpointInterval: Int = 4): DataFrame = {
     require(iters >= 1 && checkpointInterval >= 1,
       s"bad labelPropagation params: iters=$iters interval=$checkpointInterval")
-    val und = edges
-      .select(col(src).cast("long").as("x"), col(dst).cast("long").as("y"))
-      .where(col("x").isNotNull && col("y").isNotNull &&
-        col("x") =!= col("y"))
-      .select(least(col("x"), col("y")).as("a"),
-        greatest(col("x"), col("y")).as("b"))
-      .distinct()
+    val und = undirected(edges, src, dst)
     val adj = und.select(col("a").as("node"), col("b").as("nbr"))
       .unionByName(und.select(col("b").as("node"), col("a").as("nbr")))
       .repartition(col("nbr"))

@@ -38,6 +38,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object RangeJoin {
 
+  /** Largest planned size (bytes) of [[intervalOverlap]]'s exploded
+    * right side that still gets the shuffle-hash hint: 1 GiB. The
+    * estimate is catalyst's (coarse through the explode), which is why
+    * the cap sits well below what executors could actually hold. A
+    * constant: no caller sets another cap. */
+  private val BuildSideBytes: Long = 1L << 30
+
   /** Join each point row to every interval row containing it
     * (`start <= point <= end`, same `extraKeys`). Each qualifying pair
     * matches in exactly ONE cell (the point's), so no dedup step is
@@ -88,17 +95,11 @@ object RangeJoin {
     // downstream never need the sort order back.
     // SIZE-GATED (r18, ADVICE r17): a shuffled-hash build side does
     // not spill, so the hint only fires while the exploded right
-    // side's PLANNED size stays under
-    // `spark.graft.rangeJoin.buildSideBytes` (default 1 GiB); past it
-    // — wide intervals, degenerate fan-out — join selection falls back
-    // to the planner, whose sort-merge spills gracefully. The estimate
-    // is catalyst's (coarse through the explode), which is why the cap
-    // sits well below what executors could actually hold.
-    val cap = right.sparkSession.conf
-      .getOption("spark.graft.rangeJoin.buildSideBytes")
-      .map(_.toLong).getOrElse(1L << 30)
+    // side's PLANNED size stays under `BuildSideBytes`; past it —
+    // wide intervals, degenerate fan-out — join selection falls back
+    // to the planner, whose sort-merge spills gracefully.
     val rj =
-      if (r.queryExecution.optimizedPlan.stats.sizeInBytes <= cap)
+      if (r.queryExecution.optimizedPlan.stats.sizeInBytes <= BuildSideBytes)
         r.hint("shuffle_hash")
       else r
     l.join(rj, Seq("__cell") ++ extraKeys)

@@ -555,14 +555,18 @@ object Sampling {
       nTiers: Int, subBits: Int = 5): DataFrame = {
     require(nTiers >= 2 && nTiers <= 1000,
       s"curriculumTiers: nTiers must be in [2,1000], got $nTiers")
+    // one evaluation of the caller's scoring pipeline for both reads;
+    // lazy: the sketch's histogram is its single consumer until the
+    // broadcast cut row is built, and only then does the tier pass run
+    val rows = scored.localCheckpoint(false)
     val sk = Sketch.hdrSketch(
-      scored.select(col(scoreCol).as("x")), "x", subBits)
+      rows.select(col(scoreCol).as("x")), "x", subBits)
     val qMils = (1 until nTiers).map(i => (i * 1000) / nTiers)
     val cutRow = Sketch.hdrQuantiles(sk, subBits, qMils)
       .agg(expr(
         "transform(array_sort(collect_list(struct(q_mil, low))), s -> s.low)")
         .as("__cuts"))
-    scored.crossJoin(broadcast(cutRow))
+    rows.crossJoin(broadcast(cutRow))
       .withColumn("tier", expr(
         s"""CAST(aggregate(__cuts, 0L,
            |  (acc, c) -> acc + CASE WHEN $scoreCol >= c

@@ -82,49 +82,35 @@ object ScdMerge {
     * for after-rows missing from before, and identical multisets —
     * including an unchanged NULL-key row — emit nothing.
     *
-    * Scale: the unique-key branch is ONE full-outer shuffle join on
-    * the key (bucketed snapshots make it co-located); the uniqueness
-    * split costs two map-side-combinable key counts, and the multiset
-    * branch's exceptAll runs over only the ambiguous residue (empty
-    * on any healthy keyed dimension). The struct pack-and-compare
-    * keeps the comparison a single codegen'd EqualNullSafe instead of
-    * n per-column branches. */
+    * Scale: ONE pass over each snapshot. The two sides are tagged and
+    * unioned, one map-side-combinable `groupBy` counts every distinct
+    * full row per side (nb, na), and one window over the key sums those
+    * counts per key. A row of an unambiguous key emits I, D or U (a
+    * before-only version plus an after-only version is one U carrying
+    * the after row); every other row emits |nb − na| copies of D or I,
+    * the `exceptAll` multiset rule. Grouping on the full row makes the
+    * comparison null-safe, like `<=>`. */
   def snapshotDiff(before: DataFrame, after: DataFrame,
       key: String): DataFrame = {
     require(after.columns.toSet == before.columns.toSet,
       s"snapshotDiff: column sets differ " +
         s"(${before.columns.mkString(",")} vs ${after.columns.mkString(",")})")
-    val valCols = before.columns.filterNot(_ == key).toIndexedSeq
-    val uniqKeys = before.groupBy(col(key)).agg(count(lit(1)).as("__nb"))
-      .join(after.groupBy(col(key)).agg(count(lit(1)).as("__na")),
-        Seq(key), "full_outer")
-      .where(coalesce(col("__nb"), lit(0L)) <= 1 &&
-        coalesce(col("__na"), lit(0L)) <= 1 && col(key).isNotNull)
-      .select(col(key))
-    val b = before.join(uniqKeys, Seq(key), "left_semi").select(col(key),
-      struct(valCols.map(col): _*).as("_before"))
-    val a = after.join(uniqKeys, Seq(key), "left_semi").select(col(key),
-      struct(valCols.map(col): _*).as("_after"))
-    // USING-column full outer: Spark emits coalesce(left.key, right.key)
-    val j = b.join(a, Seq(key), "full_outer")
-    val changeType = when(col("_before").isNull, lit("I"))
-      .when(col("_after").isNull, lit("D"))
-      .when(!(col("_before") <=> col("_after")), lit("U"))
-    val image =
-      when(col("_after").isNull, col("_before")).otherwise(col("_after"))
-    val keyed = j.withColumn("change_type", changeType)
+    val outCols = (key +: before.columns.filterNot(_ == key).toIndexedSeq).map(col)
+    def tagged(df: DataFrame, b: Long): DataFrame =
+      df.select(outCols :+ lit(b).as("__b") :+ lit(1L - b).as("__a"): _*)
+    val (nb, na) = (col("__nb"), col("__na"))
+    val byKey = Window.partitionBy(col(key))
+    val uniq = col(key).isNotNull && col("__kb") <= 1 && col("__ka") <= 1
+    tagged(before, 1L).unionByName(tagged(after, 0L))
+      .groupBy(outCols: _*)
+      .agg(sum(col("__b")).as("__nb"), sum(col("__a")).as("__na"))
+      .withColumn("__kb", sum(nb).over(byKey))
+      .withColumn("__ka", sum(na).over(byKey))
+      .withColumn("change_type",
+        when(na > nb, when(uniq && col("__kb") === 1, lit("U")).otherwise(lit("I")))
+          .when(nb > na && !(uniq && col("__ka") === 1), lit("D")))
       .where(col("change_type").isNotNull)
-      .select(col("change_type") +: col(key) +:
-        valCols.map(c => image.getField(c).as(c)): _*)
-    val outCols = key +: valCols
-    val bRest = before.join(uniqKeys, Seq(key), "left_anti")
-      .select(outCols.map(col): _*)
-    val aRest = after.join(uniqKeys, Seq(key), "left_anti")
-      .select(outCols.map(col): _*)
-    keyed
-      .unionByName(bRest.exceptAll(aRest)
-        .select(lit("D").as("change_type") +: outCols.map(col): _*))
-      .unionByName(aRest.exceptAll(bRest)
-        .select(lit("I").as("change_type") +: outCols.map(col): _*))
+      .withColumn("__copy", explode(array_repeat(lit(0), abs(nb - na).cast("int"))))
+      .select(col("change_type") +: outCols: _*)
   }
 }

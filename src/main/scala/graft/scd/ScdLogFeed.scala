@@ -106,8 +106,9 @@ object ScdLogFeed {
     * which does the classification). This is the per-trigger body of a
     * log-feed consumer: each micro-batch of the streaming tail hands it
     * the batch's (min seq − 1, max seq] range and gets the distributed
-    * change set — two narrow replay scans and one full-outer join on
-    * the key, no driver-side data movement. */
+    * change set — two narrow replay scans, each read once, into one
+    * aggregate and one window over the key; no driver-side data
+    * movement. */
   def cdcBetween(spark: SparkSession, dir: String, fromSeq: Long,
       toSeq: Long, key: String, format: String = "parquet"): DataFrame = {
     require(fromSeq <= toSeq,

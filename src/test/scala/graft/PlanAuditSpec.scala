@@ -90,9 +90,11 @@ class PlanAuditSpec extends SparkSpec {
                                 // 1-row median fold onto the deviation
                                 // pass + the final 1-row assembly —
                                 // every side 1-row/|q|-row bounded
-    "q_curriculum_tiers" -> 3,  // unigramLm's 1-row total fold (planned
-                                // under the scored rows AND under the
-                                // sketch) + the ≤2-cut array fold; the
+    "q_curriculum_tiers" -> 1,  // the ≤2-cut array fold; the scored
+                                // rows (with unigramLm's 1-row total
+                                // fold) are checkpointed once for the
+                                // sketch and the tier pass (was 3 when
+                                // both planned the scoring), and the
                                 // hdrQuantiles rank scan is join-free
                                 // (was 6 with its q-list × sketch folds)
     "q_hdr_drift" -> 0,         // hdrDriftBy's totals join on stratum

@@ -100,12 +100,12 @@ class ScdTableStateSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val join = v1.join(v2, v1("k") === v2("k"))
     assert(rows(join) == rows(c1.join(c2, c1("k") === c2("k"))))
     assert(join.count() == 18 && fileScans(join) == 2)
-    // the diff reads each side several times; exchange reuse leaves as
-    // many scans as over two cold reads
+    // the diff reads each side once, as many scans as over two cold reads
     val diff = graft.operators.ScdMerge.snapshotDiff(v1, v2, "k")
     val coldDiff = graft.operators.ScdMerge.snapshotDiff(c1, c2, "k")
     assert(rows(diff) == rows(coldDiff))
     assert(fileScans(diff) == fileScans(coldDiff))
+    assert(fileScans(diff) == 2)
     spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.ScdCatalog].getName)
     val self = spark.sql(
       s"SELECT a.k, a.v AS v1, b.v AS v2 FROM graft.`$d` TIMESTAMP AS OF '2024-04-01' a " +
