@@ -277,11 +277,14 @@ class PlanShapeSpec extends SparkSpec {
       !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
-  test("scd_diff: one full-outer join on the key, nothing quadratic") {
+  test("scd_diff: one aggregate and one key window, no join") {
     val p = planOf("scd_diff")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
-    assert(p.contains("FullOuter"), p)
+    // each snapshot scanned once, into one full-row count and one
+    // window over the key
+    assert(count(p, "Join") == 0 && count(p, "FileScan parquet") == 2, p)
+    assert(count(p, "Window \\[") == 1, p)
   }
 
   test("bloom semi-join: might_contain prunes the probe before the exchange") {
