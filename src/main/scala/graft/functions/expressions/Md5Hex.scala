@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Drop-in replacement for the built-in `md5()` on the dedup hot paths
-  * (minhash sub-hashes, band keys, simhash token hashes): identical
+  * (LSH band keys, simhash token hashes): identical
   * lowercase-hex output, but the digest is THREAD-LOCAL instead of
   * `MessageDigest.getInstance` per call, and the hex string is built
   * in one pass. The built-in is fine for one call per row; these

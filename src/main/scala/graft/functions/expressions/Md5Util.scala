@@ -1,7 +1,7 @@
 package graft.functions.expressions
 
 /** Shared digest plumbing for the native md5-family expressions
-  * ([[Md5Hex]], [[Md5Fraction]], [[WinnowMin]]): one thread-local
+  * ([[Md5Hex]], [[Md5Fraction]], [[Md5Words]], [[WinnowMin]]): one thread-local
   * MessageDigest (the built-in md5() allocates per call) and one
   * lowercase-hex encoder. */
 private[expressions] object Md5Util {

@@ -26,39 +26,43 @@ import org.apache.spark.sql.functions._
   *
   * Everything is built from engine-portable primitives (md5, string
   * ops, higher-order array functions) so the DuckDB oracle can replay
-  * each operator in plain SQL.
+  * each operator in plain SQL; the native kernels on the hot paths
+  * (w-grams, md5 words) are byte-identical to those declarative forms.
   */
 object Dedup {
 
+  /** Distinct w-token shingles of the lowercased text, first occurrence
+    * first: `split(lower(text), " ")` tokens, each w consecutive tokens
+    * joined by one space ([[graft.functions.expressions.WGrams]]). The
+    * one tokenization of the whole dedup family — [[shingles]],
+    * [[shingleArrays]] and [[gramArray]] all build on it. Fewer than w
+    * tokens give an empty array, NULL text gives NULL. */
+  private def grams(text: Column, w: Int): Column =
+    org.apache.spark.sql.graft.CatalystBridge.wGrams(
+      split(lower(text), " "), w)
+
   /** Distinct w-token shingles of the lowercased text as ONE array per
     * document — the narrow, un-exploded form (intersection checks work
-    * directly on it via `array_intersect`). */
+    * directly on it via `array_intersect`). Docs with < w tokens (or
+    * NULL text) are dropped. */
   def shingleArrays(docs: DataFrame, id: String = "doc_id",
-      textCol: String = "text", w: Int = 3): DataFrame = {
-    val refs = (0 until w).map(k => s"toks[i+$k]").mkString(", ")
+      textCol: String = "text", w: Int = 3): DataFrame =
+    // filter on the token count, not on `sharr`: a filter over the
+    // aliased array is pushed below the projection and builds it twice
     Fan.out(docs)
-      .select(col(id), split(lower(col(textCol)), " ").as("toks"))
-      .where(size(col("toks")) >= w)
-      .select(col(id), array_distinct(expr(
-        s"transform(sequence(0, size(toks)-$w), i -> concat_ws(' ', $refs))"))
-        .as("sharr"))
-  }
+      .where(size(split(lower(col(textCol)), " ")) >= w)
+      .select(col(id), grams(col(textCol), w).as("sharr"))
 
   /** w-token shingles of the lowercased text, distinct per document.
     * Output: (id, shingle) exploded — the input to Jaccard/MinHash.
-    * NB: the generator stays INLINE over the transform expression — an
-    * intermediate aliased array projection before explode measured 4x
-    * slower at sf0.1 (breaks projection collapse around the generate). */
+    * The generator explodes [[grams]] directly: docs with < w tokens
+    * explode an empty array (no rows), and no aliased array projection
+    * sits between the generator and its input (one measured 4x slower
+    * at sf0.1 — it breaks projection collapse around the generate). */
   def shingles(docs: DataFrame, id: String = "doc_id",
-      textCol: String = "text", w: Int = 3): DataFrame = {
-    val refs = (0 until w).map(k => s"toks[i+$k]").mkString(", ")
+      textCol: String = "text", w: Int = 3): DataFrame =
     Fan.out(docs)
-      .select(col(id), split(lower(col(textCol)), " ").as("toks"))
-      .where(size(col("toks")) >= w)
-      .select(col(id), explode(array_distinct(expr(
-        s"transform(sequence(0, size(toks)-$w), i -> concat_ws(' ', $refs))")))
-        .as("shingle"))
-  }
+      .select(col(id), explode(grams(col(textCol), w)).as("shingle"))
 
   /** Benchmark DECONTAMINATION — flag corpus documents sharing
     * verbatim n-gram spans with an evaluation benchmark (the GPT-3
@@ -121,12 +125,7 @@ object Dedup {
     * empty array. */
   def gramArray(text: Column, w: Int): Column = {
     require(w >= 1, s"gramArray needs w >= 1, got $w")
-    val toks = split(lower(text), " ")
-    when(size(toks) >= w,
-      array_distinct(transform(sequence(lit(0), size(toks) - w),
-        i => concat_ws(" ",
-          (0 until w).map(k => element_at(toks, i + k + 1)): _*))))
-      .otherwise(array().cast("array<string>"))
+    coalesce(grams(text, w), array().cast("array<string>"))
   }
 
   /** Persist the benchmark's distinct n-grams as the decontamination
@@ -1446,25 +1445,49 @@ object Dedup {
 
   /** MinHash signatures: numHashes independent permutations simulated
     * by per-shingle hashes, min-aggregated per doc. Output: id,
-    * m0..m{k-1}. One groupBy over the exploded shingles; each min is
-    * map-side combinable.
+    * m0..m{k-1}, each the minimum 8-char lowercase hex component. One
+    * groupBy over the exploded shingles; each min is map-side
+    * combinable.
     *
-    * Hashing cost (round-1 bench lesson: md5 dominates): each md5
-    * yields 128 bits = four independent 32-bit (8-hex-char) sub-hashes,
-    * so k signatures need only ceil(k/4) md5 calls per shingle —
-    * computed once in a pre-projection, then sliced by substring.
-    * 32-bit sub-hashes keep accidental min-collisions across dissimilar
-    * docs negligible while staying replayable in any SQL engine
-    * (md5 + substr). */
+    * Hashing: each md5 yields 128 bits = four independent 32-bit
+    * components, so k signatures need ceil(k/4) digests per shingle
+    * (seed `s` hashes `"s|" + shingle`), replayable in any SQL engine
+    * as `min(substr(md5(...), 8i+1, 8))`. Here each component is the
+    * digest's unsigned big-endian word as a BIGINT
+    * ([[graft.functions.expressions.Md5Words]]): fixed-width lowercase
+    * hex orders like the unsigned value, so the min is the same, and it
+    * is formatted back to 8 hex chars once per doc. The string form
+    * profiled at 5 000 docs / 268k shingles (4 cores): a min over
+    * strings has no fixed-width buffer, so Spark planned Sort +
+    * SortAggregate and evaluated its 16 substrings interpreted —
+    * `UTF8String.substring` 35 % and the sort aggregate 13 % of the
+    * stage's task CPU, md5 itself 5 %. Over BIGINT words the min is a
+    * codegen'd HashAggregate. */
   def minHashSignatures(sh: DataFrame, id: String = "doc_id",
       numHashes: Int = 16): DataFrame = {
+    require(numHashes >= 1,
+      s"minHashSignatures needs numHashes >= 1, got $numHashes")
     val nSeeds = (numHashes + 3) / 4
     val withH = sh.select(col(id) +: (0 until nSeeds).map(sd =>
-      Sketch.md5Hex(concat(lit(s"$sd|"), col("shingle"))).as(s"h$sd")): _*)
+      org.apache.spark.sql.graft.CatalystBridge.md5Words(
+        concat(lit(s"$sd|"), col("shingle"))).as(s"h$sd")): _*)
     val aggs = (0 until numHashes).map(i =>
-      min(substring(col(s"h${i / 4}"), (i % 4) * 8 + 1, 8)).as(s"m$i"))
+      min(col(s"h${i / 4}").getItem(i % 4)).as(s"m$i"))
     withH.groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
+      .select(col(id) +: (0 until numHashes).map(i =>
+        lpad(lower(hex(col(s"m$i"))), 8, "0").as(s"m$i")): _*)
   }
+
+  /** Fail loud on banding parameters that cannot band: `bands` must
+    * split the `numHashes` components evenly. Otherwise a band of zero
+    * rows keys every doc on the same empty band (every pair a
+    * candidate), and a remainder silently drops trailing components. */
+  private def requireBands(op: String, numHashes: Int, bands: Int): Unit =
+    require(numHashes >= 1 && bands >= 1 && bands <= numHashes &&
+      numHashes % bands == 0,
+      s"$op: bands must divide numHashes evenly with " +
+        s"1 <= bands <= numHashes, got numHashes = $numHashes, " +
+        s"bands = $bands")
 
   /** Skew-safe bucket cap: drops every row of a key-group wider than
     * `maxBucket`. A `count(*) OVER (PARTITION BY keys)` window would
@@ -1516,6 +1539,7 @@ object Dedup {
   def lshCandidates(sigs: DataFrame, id: String = "doc_id",
       numHashes: Int = 16, bands: Int = 4,
       maxBucket: Int = 1000): DataFrame = {
+    requireBands("lshCandidates", numHashes, bands)
     val exploded = bandRows(sigs, id, numHashes, bands)
     val pruned = dropWideBuckets(exploded, Seq("band", "bkey"), maxBucket)
     val l = pruned.select(col("band"), col("bkey"), col(id).as("id_a"))
@@ -1545,6 +1569,7 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, id: String = "doc_id",
       textCol: String = "text", w: Int = 3, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.8): DataFrame = {
+    requireBands("minhashLshPairs", numHashes, bands)
     val arr = shingleArrays(docs, id, textCol, w)
     val sh = shingles(docs, id, textCol, w)
     val cands = lshCandidates(minHashSignatures(sh, id, numHashes), id,
@@ -1604,6 +1629,7 @@ object Dedup {
       textCol: String = "text", w: Int = 3, numHashes: Int = 16,
       bands: Int = 4, threshold: Double = 0.8, maxBucket: Int = 1000,
       corpusSigs: Option[DataFrame] = None): DataFrame = {
+    requireBands("minhashLshPairsIncremental", numHashes, bands)
     val sigsC = corpusSigs.getOrElse(
       minHashSignatures(shingles(corpusDocs, id, textCol, w), id, numHashes))
     val sigsB =

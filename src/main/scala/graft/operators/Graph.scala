@@ -209,11 +209,14 @@ object Graph {
   }
 
   /** Deduped, null-free, self-loop-free long-typed edge list. Lazily
-    * checkpointed (r17): every caller consumes it 2–4× (the node-set
-    * union reads it twice, the out-degree attach joins it against its
-    * own groupBy) — without the checkpoint the caller's WHOLE edge
-    * subtree (q_textrank's vocab joins, a coproject explode, …)
-    * re-ran once per consumer. Callers that immediately re-checkpoint
+    * checkpointed (r17): each checkpointing caller (pageRank,
+    * personalizedPageRank, pageRankIndexWrite, randomWalks) reads it
+    * three times — once in the node set ([[nodesOf]], one explode) and
+    * twice where the edges join their own per-src groupBy (the
+    * out-degree attach [[edgesWithOutdeg]], randomWalks' neighbour
+    * table) — without the checkpoint the caller's WHOLE edge subtree
+    * (q_textrank's vocab joins, a coproject explode, …) re-ran once
+    * per consumer. Callers that immediately re-checkpoint
     * the result (hits' repartition + eager checkpoint) or wrap it in
     * their own lazy checkpoint (bfsHops) pass `checkpoint = false` —
     * the double block-manager residency bought nothing (ADVICE r17). */

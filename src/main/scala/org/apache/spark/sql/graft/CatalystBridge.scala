@@ -58,6 +58,18 @@ object CatalystBridge {
     ExpressionUtils.column(graft.functions.expressions.Md5Hex(
       ExpressionUtils.expression(c)))
 
+  /** Native distinct w-grams of a token array (see
+    * [[graft.functions.expressions.WGrams]]). */
+  def wGrams(tokens: Column, w: Int): Column =
+    ExpressionUtils.column(graft.functions.expressions.WGrams(
+      ExpressionUtils.expression(tokens), w))
+
+  /** Native md5 digest as four unsigned 32-bit BIGINT words (see
+    * [[graft.functions.expressions.Md5Words]]). */
+  def md5Words(c: Column): Column =
+    ExpressionUtils.column(graft.functions.expressions.Md5Words(
+      ExpressionUtils.expression(c)))
+
   /** Native Unicode normalization (see
     * [[graft.functions.expressions.UnicodeNormalize]]). */
   def unicodeNormalize(c: Column, form: java.text.Normalizer.Form): Column =

@@ -52,6 +52,55 @@ class DedupSpec extends SparkSpec {
     assert(lsh == exact)
   }
 
+  /** Every MinHash-LSH entry point rejects (numHashes, bands) at
+    * construction, naming itself and both values. */
+  private def assertBandingRejected(numHashes: Int, bands: Int): Unit = {
+    import spark.implicits._
+    val sigs = Dedup.minHashSignatures(Dedup.shingles(docs))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "lshCandidates" -> (() =>
+        Dedup.lshCandidates(sigs, numHashes = numHashes, bands = bands)),
+      "minhashLshPairs" -> (() =>
+        Dedup.minhashLshPairs(docs, numHashes = numHashes, bands = bands)),
+      "minhashLshPairsIncremental" -> (() =>
+        Dedup.minhashLshPairsIncremental(docs.where($"doc_id" % 2 === 0),
+          docs.where($"doc_id" % 2 === 1), numHashes = numHashes,
+          bands = bands)))
+    for ((op, call) <- calls) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(op) &&
+        e.getMessage.contains(s"numHashes = $numHashes") &&
+        e.getMessage.contains(s"bands = $bands"), e.getMessage)
+    }
+  }
+
+  test("minHashSignatures rejects numHashes = 0 (was: empty.head)") {
+    val e = intercept[IllegalArgumentException](
+      Dedup.minHashSignatures(Dedup.shingles(docs), numHashes = 0))
+    assert(e.getMessage.contains("numHashes >= 1"), e.getMessage)
+    assertBandingRejected(0, 4)
+  }
+
+  test("bands > numHashes is rejected (was: every doc on one empty band)") {
+    assertBandingRejected(16, 32)
+  }
+
+  test("numHashes % bands != 0 is rejected (was: trailing components dropped)") {
+    assertBandingRejected(16, 5)
+    // an even split other than the default still bands
+    val exact = Dedup.jaccardPairs(docs, threshold = 0.8)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSet
+    val eight = Dedup.minhashLshPairs(docs, bands = 8, threshold = 0.8)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .toSet
+    assert(eight == exact)
+  }
+
+  test("bands = 0 is rejected (was: divide by zero)") {
+    assertBandingRejected(16, 0)
+  }
+
   test("jaccardJoin ≡ brute jaccardPairs on the fixture (full rows)") {
     def rows(f: org.apache.spark.sql.DataFrame) =
       f.select("id_a", "id_b", "n_common", "n_a", "n_b").collect()
